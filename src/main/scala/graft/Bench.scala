@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.fixtures.Fixtures
 import graft.functions.GraftFunctions._
 import graft.operators.SpatialJoin
+import graft.queries.{QueryRunner, QuerySpec}
 
 /** Shared bench kernels (BASELINE.md protocol: warm-up discarded, median of
   * >=3 timed runs, throughput = input rows / median wall-clock).
@@ -96,38 +97,38 @@ object Bench {
     }
     val mRowsPerSec = totalRows / tFlag / 1e6
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // median of 3 in-JVM runs per query: this VM's hypervisor steals up
-      // to ~31% of busy time in bad windows (BASELINE.md caveat), and a
-      // single-shot number read ~1.4x slow across the whole round-3 suite
-      // through no plan fault — one stolen window can inflate at most one
-      // of the three runs, and the median discards it
-      val ts = (1 to 3).map { _ =>
-        val t = BenchCore.timed {
-          try fn(spark, sfDir).count() catch { case _: Throwable => () }
-        }
-        // isolation between sequential runs sharing one JVM: a full GC
-        // lets the ContextCleaner drop finished broadcasts /
-        // localCheckpoint blocks NOW instead of mid-way through the next
-        // timed query — without it, later queries absorb earlier queries'
-        // cleanup (the heavier round-3 ANN/verify queries inflated
-        // untouched queries by 30-90% in-suite while fresh-JVM isolation
-        // showed no regression)
-        System.gc()
-        t
-      }.sorted
-      name -> ts(1)
-    }
+    val outcomes = timeQueries(spark, SparkEntry.registry, sfDir)
+    val results = outcomes.collect { case (name, Right(t)) => name -> t }
     val qs = (results :+ ("flagship_join_tiles_16m" -> tFlag))
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    val errors = outcomes.collect { case (name, Left(e)) =>
+      s"${QueryRunner.jsonString(name)}:${QueryRunner.jsonString(QueryRunner.brief(e))}"
+    }
     val total = results.map(_._2).sum + tFlag
     val (steal1, busy1) = BenchCore.cpuJiffies()
     val stealPct =
       if (busy1 > busy0) 100.0 * (steal1 - steal0) / math.max(1L, (steal1 - steal0) + (busy1 - busy0))
       else 0.0
-    println(s"""{"metric":"flagship join+tiling throughput","value":${f"$mRowsPerSec%.3f"},"unit":"Mrows/s","total_sec":${f"$total%.3f"},"host_steal_pct":${f"$stealPct%.1f"},"queries":$qs,"cpus":"$cpus","sf":"$sfDir"}""")
+    println(s"""{"metric":"flagship join+tiling throughput","value":${f"$mRowsPerSec%.3f"},"unit":"Mrows/s","total_sec":${f"$total%.3f"},"host_steal_pct":${f"$stealPct%.1f"},"queries":$qs,"errors":${errors.mkString("{", ",", "}")},"cpus":"$cpus","sf":"$sfDir"}""")
     spark.stop()
+    if (errors.nonEmpty) sys.exit(1)
   }
+
+  /** Median of 3 in-JVM runs per query: this VM's hypervisor steals up to
+    * ~31% of busy time in bad windows (BASELINE.md caveat), and a
+    * single-shot number read ~1.4x slow across the whole round-3 suite
+    * through no plan fault — one stolen window can inflate at most one of
+    * the three runs, and the median discards it. A query that throws is
+    * not timed: its outcome is the error.
+    */
+  def timeQueries(spark: SparkSession, specs: Seq[QuerySpec],
+                  sfDir: String): Seq[(String, Either[Throwable, Double])] =
+    QueryRunner.run(specs) { q =>
+      (1 to 3).map { i =>
+        if (i > 1) System.gc() // the runner's between-query isolation, between runs too
+        BenchCore.timed { q.run(spark, sfDir).count() }
+      }.sorted.apply(1)
+    }
 }
 
 /** Two-cluster-size scaling proxy (north rule; task instruction): same job,

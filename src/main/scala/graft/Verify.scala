@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import graft.queries.QueryRunner
+/** Correctness dump: each registered query's result → parquet, plus
+  * oracle_sql.json, for a DuckDB compare (tools/compare.py). A query that
+  * throws is reported and the others still run; the process then lists
+  * the failed names and exits 1.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
@@ -22,37 +26,26 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // same isolation as Bench: a full GC lets the ContextCleaner drop
-      // finished broadcasts / localCheckpoint blocks between queries —
-      // 95 queries share this JVM, and accumulated pins measurably
-      // degrade later stages (BENCH/BASELINE.md round 4)
-      System.gc()
+    val failed = QueryRunner.run(SparkEntry.registry.filter(q => only(q.name))) { q =>
+      q.run(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}.parquet")
+    }.collect { case (name, Left(e)) =>
+      System.err.println(s"[verify] $name failed: ${QueryRunner.brief(e)}")
+      name
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Dual-key: the driver's CORRECTNESS keys are dump basenames
     // ("qNN_name.parquet") while ours are bare names — emit both so either
     // lookup hits (round-1 all-no_oracle failure was exactly this mismatch).
+    // jsonString escapes every control char: a tab or CR in the SQL would
+    // otherwise make json.load of the file fail and zero the correctness.
     val json = SparkEntry.oracleSql
       .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${QueryRunner.jsonString(k)}: ${QueryRunner.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -71,34 +71,6 @@ object Fixtures {
   private def clampLon(v: Long) = math.max(-170000000L, math.min(170000000L, v))
   private def clampLat(v: Long) = math.max(-80000000L, math.min(80000000L, v))
 
-  /** Planted-SKEW point table (id, lonm, latm): `hotFrac`% of rows fall in
-    * a 0.005-deg Gaussian at city 0's center — essentially ONE join-key
-    * cell at the flagship cover levels — and the rest follow [[locOf]]'s
-    * 70/30 city/uniform mix. Drives tools.SkewBench (salted vs AQE vs
-    * naive shuffle join under a hot key); FlagshipSpec's salted-equality
-    * test covers correctness of the salted plan.
-    */
-  def skewPoints(spark: SparkSession, n: Long, hotFrac: Int = 50): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val parts = math.max(8L, math.min(256L, n / 262144L)).toInt
-    spark.range(0, n, 1, parts).as[Long].map { i =>
-      val h1 = Rand.mix(i * 131 + SEED + 9)
-      if (java.lang.Long.remainderUnsigned(h1, 100) < hotFrac) {
-        val (cx, cy) = cities(0)
-        val h3 = Rand.mix(h1 + 23)
-        val u1 = math.max(Rand.unit(h3), 1e-12)
-        val u2 = Rand.unit(Rand.mix(h3 + 1))
-        val r = math.sqrt(-2.0 * math.log(u1)) * 0.005
-        (i, clampLon(FixedPoint.toMicro(cx + r * math.cos(2 * math.Pi * u2))),
-          clampLat(FixedPoint.toMicro(cy + r * math.sin(2 * math.Pi * u2))))
-      } else {
-        val (lo, la) = locOf(i)
-        (i, lo, la)
-      }
-    }.toDF("id", "lonm", "latm")
-  }
-
   /** (w, h) of image row i — exposed separately so oracle generators can
     * derive expected per-image frame/pixel counts from the SAME rule
     * without decoding anything (q62/q64 bound oracles).

@@ -469,6 +469,11 @@ object Multimodal {
     * brightness/contrast shifts that flip avg-hash bits. Feed the output
     * into [[Dedup.hammingPairs]] for dHash-keyed image near-dup.
     *
+    * Blocks are (w/8)×(h/8) px; when w or h is not a multiple of 8 the
+    * remainder columns/rows fold into block 7 of their row/column. An
+    * image under 8 px on either side has no block grid and is rejected
+    * with an IllegalArgumentException naming its size.
+    *
     * On generator images the pooled cells ARE the phash bit blocks, so
     * dhash = (~p) & rotlRow(p) in closed form (bit set ⟺ current bit 0 ∧
     * row-next bit 1) — the oracle replays the corpus histogram from that
@@ -482,6 +487,7 @@ object Multimodal {
         it.map { r =>
           val (bytes, w, h, fmt) = (r.getAs[Array[Byte]](0),
             r.getInt(1), r.getInt(2), r.getString(3))
+          require(w >= 8 && h >= 8, s"dHash needs an image of at least 8x8 px, got ${w}x$h")
           val px = decodeAny(bytes, fmt, w, h)
           java.util.Arrays.fill(sums, 0L)
           val bw = w / 8; val bh = h / 8

@@ -402,6 +402,13 @@ class MultimodalSpec extends AnyFunSuite {
         Seq((brighter, w, h, "raw")).toDF("bytes", "w", "h", "fmt"))
       .collect()(0).getLong(2)
     assert(gotBright === expect, "uniform brightness shift must not flip dHash bits")
+    // under 8 px there is no 8×8 block grid: a named rejection, not a division by zero
+    val tiny = intercept[Exception](Multimodal.dHash(
+        Seq((Array.fill[Byte](7 * 7)(100), 7, 7, "raw")).toDF("bytes", "w", "h", "fmt"))
+      .collect())
+    val causes = Iterator.iterate[Throwable](tiny)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("7x7")), s"expected a size-naming rejection, got $tiny")
   }
 
   test("lumaHistogram: kernel matches brute per-pixel histogram and the popcount rule across formats") {
