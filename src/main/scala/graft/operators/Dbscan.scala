@@ -32,8 +32,9 @@ import org.apache.spark.sql.functions._
   *   2. exact int64 distance filter dx²+dy² <= eps² inside the join —
   *      codegen, no UDF.
   *   3. degree count = one hash aggregate; core = degree >= minPts.
-  *   4. components via [[Dedup.dupClusters]] — min-label propagation +
-  *      star contraction, O(log² n) rounds, convergence `require`d.
+  *   4. components via [[Dedup.dupClusters]] — a one-task union-find when
+  *      the core edges fit its bound, alternating star contraction
+  *      (O(log² n) rounds, convergence `require`d) above it.
   *   5. border labels = one more aggregate over the (non-core, core)
   *      neighbor edges.
   *
@@ -133,7 +134,7 @@ object Dbscan {
     labelFrom(pts, id, neighborPairsST(pts, id, x, y, t, eps1, eps2), minPts)
 
   /** Shared deterministic labeling downstream of a neighbor-pair set:
-    * degree → core, star-contraction components, min-core-neighbor
+    * degree → core, dupClusters components, min-core-neighbor
     * borders, noise −1.
     */
   private def labelFrom(pts: DataFrame, id: Column, nbrIn: DataFrame,

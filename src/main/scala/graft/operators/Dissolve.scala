@@ -26,9 +26,10 @@ object Dissolve {
     * MIN segment id per node; the component edges are the node-STAR pairs
     * (every co-incident segment → the node's min segment), so a junction
     * of degree k contributes k−1 edges, never k² — the same hub-safe shape
-    * as the LSH band trick. Components run through the star-contraction
-    * kernel ([[Dedup.dupClusters]], O(log² n) rounds); the summary is one
-    * hash aggregate. No all-pairs stage, no window, no driver data.
+    * as the LSH band trick. Components run through [[Dedup.dupClusters]]
+    * (one task when the pairs fit its bound, else O(log² n) star-contraction
+    * rounds); the summary is one hash aggregate. No all-pairs stage, no
+    * window, no driver data.
     */
   def dissolveSegments(segs: DataFrame, sid: Column,
                        x1: Column, y1: Column, x2: Column, y2: Column)

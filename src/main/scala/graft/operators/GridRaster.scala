@@ -103,8 +103,9 @@ object GridRaster {
     * one — everything after is RASTER-sized. Mask edges are one equi-join
     * of each mask cell against its right/up neighbor keys (each undirected
     * adjacency produced exactly once), components via [[Dedup.dupClusters]]
-    * (alternating star contraction, O(log² n) rounds, convergence
-    * `require`d — region diameters are raster-bounded), then ONE hash
+    * (one task when the edges fit its bound, else alternating star
+    * contraction, O(log² n) rounds, convergence `require`d — region
+    * diameters are raster-bounded), then ONE hash
     * aggregate per region. No driver-side data, no all-pairs stage.
     */
   def polygonize(points: DataFrame, lonCol: Column, latCol: Column,

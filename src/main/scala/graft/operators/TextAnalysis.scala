@@ -236,16 +236,18 @@ object TextAnalysis {
     * text. Pair counts weight by word frequency and count EVERY adjacent
     * occurrence (overlaps included); ties break (count DESC, then
     * lhs+US+rhs ASC) so the result is deterministic and the DuckDB twin
-    * recomputes it exactly (q6i). `maxVocab` guards the driver collect.
+    * recomputes it exactly (q6i). `maxVocab` guards the driver collect:
+    * the word table is counted first and collected only under the cap.
     */
   def bpeTrain(df: DataFrame, textCol: Column, numMerges: Int,
                maxVocab: Long = 1000000L): Seq[BpeMerge] = {
     val words = df.select(explode(Dedup.tokens(lower(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("f"))
-    val rows = words.collect()
-    require(rows.length <= maxVocab,
-      s"${rows.length} distinct words exceed maxVocab=$maxVocab — raise the cap " +
+    val nWords = words.count()
+    require(nWords <= maxVocab,
+      s"$nWords distinct words exceed maxVocab=$maxVocab — raise the cap " +
         "or pre-filter the corpus; the merge loop needs the word table in memory")
+    val rows = words.collect()
     var table = rows.map(r => (symbolsOf(r.getString(0)), r.getLong(1)))
     val out = Seq.newBuilder[BpeMerge]
     var rank = 0

@@ -939,7 +939,9 @@ object RasterQueries {
         .orderBy("cx", "cy")
     }, {
       // q9j's chained relaxation with labels: per round, union then min
-      // dist per node, then min label among rows achieving it
+      // dist per node, then min label among rows achieving it. Every level
+      // is MATERIALIZED: d_k reads c_k twice and c_k reads d_{k-1}, so
+      // inlined CTEs would expand about 2^6-fold (DuckDB ran out of memory)
       val K = 1073741824L; val g = 2000000L
       val d0 = (0L until 3L).map { j =>
         val id = ((Derive.lonMicroL(j) + 180000000L) / g) * K +
@@ -947,10 +949,10 @@ object RasterQueries {
         s"($id, 0, $j)"
       }.mkString(", ")
       val rounds = (1 to 6).map { k =>
-        s"""c$k AS (SELECT node, dist, lab FROM d${k - 1} UNION ALL
+        s"""c$k AS MATERIALIZED (SELECT node, dist, lab FROM d${k - 1} UNION ALL
            |  SELECT e.d AS node, d${k - 1}.dist + 1 AS dist, d${k - 1}.lab
            |  FROM d${k - 1} JOIN e ON d${k - 1}.node = e.s),
-           |d$k AS (SELECT c.node, CAST(mm.m AS BIGINT) AS dist,
+           |d$k AS MATERIALIZED (SELECT c.node, CAST(mm.m AS BIGINT) AS dist,
            |  CAST(min(c.lab) AS BIGINT) AS lab
            |  FROM c$k c JOIN (SELECT node, min(dist) AS m FROM c$k
            |    GROUP BY node) mm ON mm.node = c.node AND c.dist = mm.m

@@ -1500,7 +1500,7 @@ object SpatialQueries {
     //      keys with a deterministic ~9% segment drop, so chains fragment
     //      wherever a position is missing and the components have
     //      genuinely varied sizes. Node-star pairs (k−1 edges per degree-k
-    //      junction) feed the star-contraction kernel; lengths ride the
+    //      junction) feed the components kernel; lengths ride the
     //      fixed IEEE chain.
     QuerySpec("q9y_dissolve", (s, dir) => {
       val chain = col("o_orderkey") % 200L

@@ -51,7 +51,6 @@ object StreamingQueries {
       // batch twin of the streamed quality -> repetition curation chain (the
       // q51 keep gate composed with the q68 repetition gate)
       {
-      val stopList = TextAnalysis.stopwords.map(w => s"'$w'").mkString(", ")
       s"""WITH ${TextOracle.toksCte()},
          |sc AS (SELECT d.doc_id AS doc_id, CAST(length(d.text) AS INTEGER) AS n_chars,
          |  CAST(len(t) AS INTEGER) AS n_tokens,

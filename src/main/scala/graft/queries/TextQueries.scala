@@ -482,7 +482,6 @@ object TextQueries {
           .when(col("bucket") < 90, "val").otherwise("test"))
         .select("doc_id", "lang", "split").orderBy("doc_id")
     }, {
-      val stopList = TextAnalysis.stopwords.map(w => s"'$w'").mkString(", ")
       val norm = "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))"
       val bucket = TextOracle.charHashSql("CAST(doc_id AS VARCHAR) || ':split-v1'") + " % 100"
       s"""WITH ${TextOracle.toksCte()},

@@ -217,8 +217,10 @@ object PlanDump {
         "cell vs 9-exploded ring — each pair produced exactly once, no " +
         "dedup exchange), codegen int64 distance filter; degree and " +
         "border labels are hash aggregates with map-side partials; the " +
-        "component loop is dupClusters' O(log² n) alternating star contraction " +
-        "over localCheckpointed edges. No all-pairs stage, no driver data.",
+        "components come from dupClusters: one localCheckpointed, counted " +
+        "edge table, then a one-task union-find while it fits 2^20 pairs " +
+        "(O(log² n) alternating star-contraction rounds above that). " +
+        "No all-pairs stage, no driver data.",
       graft.operators.Dbscan.cluster(
         spark.read.parquet(s"$sf/customer.parquet")
           .select(col("c_custkey"),

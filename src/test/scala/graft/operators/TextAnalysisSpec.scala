@@ -189,6 +189,16 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(got === want)
   }
 
+  test("BPE train: a word table over maxVocab raises before the merge loop; at the cap it trains") {
+    // 5 distinct lowercased words: low, lower, lowest, new, newer
+    val docs = Seq((1L, "low Lower lowest"), (2L, "new newer low")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      TextAnalysis.bpeTrain(docs, col("text"), numMerges = 3, maxVocab = 2)
+    }
+    assert(e.getMessage.contains("5 distinct words exceed maxVocab=2"), e.getMessage)
+    assert(TextAnalysis.bpeTrain(docs, col("text"), numMerges = 3, maxVocab = 5).length === 3)
+  }
+
   test("LM coverage: train counts, hits vs misses, zero-bigram docs, threshold") {
     val train = Seq(
       (1L, "the cat sat the cat sat"),   // (the,cat)x2 (cat,sat)x2 (sat,the)x1

@@ -43,10 +43,12 @@ def main(out_dir, sf_dir):
         s = con.execute(f"SELECT * FROM '{spark_dir}/*.parquet'")
         scols = [d[0] for d in s.description]; srows = s.fetchall()
         try:
+            # the twin runs once: types from its Arrow table, rows read
+            # back through DuckDB so values convert exactly as execute() did
             darrow = con.sql(oracle[name]).fetch_arrow_table()
             dtypes = {f.name: str(f.type) for f in darrow.schema}
-            d = con.execute(oracle[name])
-            dcols = [x[0] for x in d.description]; drows = d.fetchall()
+            d = con.from_arrow(darrow)
+            dcols = d.columns; drows = d.fetchall()
         except Exception as e:
             print(f"FAIL  {name}: oracle SQL error: {e}"); fails += 1; continue
         import pyarrow.parquet as _pq, re as _re
