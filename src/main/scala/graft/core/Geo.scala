@@ -235,9 +235,9 @@ final case class PolyM(rings: Array[RingM]) {
 }
 
 /** Compact wire form for PolyM (ring count, per-ring vertex count + coord
-  * longs) — the refine side of the DISTRIBUTED cover join carries polygon
-  * rings on partial cover rows; this codec is ~10× cheaper than WKB parse
-  * per probe (no JTS objects, straight longs).
+  * longs, big-endian) — the refine side of the DISTRIBUTED cover join
+  * carries polygon rings on partial cover rows, and Raycast.classifyBytes
+  * reads them in place per probe (no JTS objects, no decoded copy).
   */
 object PolyBytes {
   def toBytes(p: PolyM): Array[Byte] = {
@@ -251,19 +251,6 @@ object PolyBytes {
       while (i < r.xs.length) { bb.putLong(r.xs(i)); bb.putLong(r.ys(i)); i += 1 }
     }
     bb.array()
-  }
-
-  def fromBytes(b: Array[Byte]): PolyM = {
-    val bb = java.nio.ByteBuffer.wrap(b)
-    val nr = bb.getInt()
-    val rings = Array.tabulate(nr) { _ =>
-      val n = bb.getInt()
-      val xs = new Array[Long](n); val ys = new Array[Long](n)
-      var i = 0
-      while (i < n) { xs(i) = bb.getLong(); ys(i) = bb.getLong(); i += 1 }
-      RingM(xs, ys)
-    }
-    PolyM(rings)
   }
 }
 
@@ -280,6 +267,25 @@ object PolyBytes {
   * point-in-polygon").
   */
 object Raycast {
+  /** One ring edge (x1, y1)-(x2, y2) against the point: 2 if the point lies
+    * on the edge, 1 if a ray from the point to +x crosses it, else 0. The
+    * whole integer test, shared by [[classify]] and [[classifyBytes]].
+    */
+  @inline private def edge(px: Long, py: Long, x1: Long, y1: Long, x2: Long, y2: Long): Int = {
+    // on-segment test: collinear and within the segment's bbox
+    val cross = (x2 - x1) * (py - y1) - (px - x1) * (y2 - y1)
+    if (cross == 0 &&
+        px >= math.min(x1, x2) && px <= math.max(x1, x2) &&
+        py >= math.min(y1, y2) && py <= math.max(y1, y2)) 2
+    // crossing test for a ray to +x; half-open in y so a vertex exactly
+    // at py is counted once (standard even-odd convention)
+    else if ((y1 > py) != (y2 > py)) {
+      // sign of (intersection_x - px) == sign of cross / (y2 - y1)
+      if (y2 > y1) { if (cross > 0) 1 else 0 }
+      else { if (cross < 0) 1 else 0 }
+    } else 0
+  }
+
   /** @return 1 if strictly inside by even-odd, 2 if on boundary, 0 outside */
   def classify(px: Long, py: Long, poly: PolyM): Int = {
     var crossings = 0
@@ -291,21 +297,51 @@ object Raycast {
       var x1 = r.xs(n - 1); var y1 = r.ys(n - 1)
       while (i < n) {
         val x2 = r.xs(i); val y2 = r.ys(i)
-        // on-segment test: collinear and within the segment's bbox
-        val cross = (x2 - x1) * (py - y1) - (px - x1) * (y2 - y1)
-        if (cross == 0 &&
-            px >= math.min(x1, x2) && px <= math.max(x1, x2) &&
-            py >= math.min(y1, y2) && py <= math.max(y1, y2)) return 2
-        // crossing test for a ray to +x; half-open in y so a vertex exactly
-        // at py is counted once (standard even-odd convention)
-        if ((y1 > py) != (y2 > py)) {
-          // sign of (intersection_x - px) == sign of cross / (y2 - y1)
-          if (y2 > y1) { if (cross > 0) crossings += 1 }
-          else { if (cross < 0) crossings += 1 }
-        }
+        val e = edge(px, py, x1, y1, x2, y2)
+        if (e == 2) return 2
+        crossings += e
         x1 = x2; y1 = y2
         i += 1
       }
+      ri += 1
+    }
+    if ((crossings & 1) == 1) 1 else 0
+  }
+
+  // Big-endian views of a byte[] (the PolyBytes layout), read in place
+  // with no wrapper object per call.
+  private[this] val IntBE =
+    java.lang.invoke.MethodHandles.byteArrayViewVarHandle(classOf[Array[Int]], java.nio.ByteOrder.BIG_ENDIAN)
+  private[this] val LongBE =
+    java.lang.invoke.MethodHandles.byteArrayViewVarHandle(classOf[Array[Long]], java.nio.ByteOrder.BIG_ENDIAN)
+
+  /** [[classify]] over the [[PolyBytes]] wire form, read in place: each
+    * vertex is read at its byte offset, with no PolyM built and nothing
+    * allocated — the refine of a join whose rows carry ring bytes calls
+    * this per row.
+    */
+  def classifyBytes(px: Long, py: Long, bytes: Array[Byte]): Int = {
+    val nr = IntBE.get(bytes, 0): Int
+    var crossings = 0
+    var off = 4 // offset of the current ring's vertex count
+    var ri = 0
+    while (ri < nr) {
+      val n = IntBE.get(bytes, off): Int
+      val first = off + 4
+      val end = first + 16 * n
+      var x1 = LongBE.get(bytes, end - 16): Long
+      var y1 = LongBE.get(bytes, end - 8): Long
+      var p = first
+      while (p < end) {
+        val x2 = LongBE.get(bytes, p): Long
+        val y2 = LongBE.get(bytes, p + 8): Long
+        val e = edge(px, py, x1, y1, x2, y2)
+        if (e == 2) return 2
+        crossings += e
+        x1 = x2; y1 = y2
+        p += 16
+      }
+      off = end
       ri += 1
     }
     if ((crossings & 1) == 1) 1 else 0

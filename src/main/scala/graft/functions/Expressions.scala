@@ -78,18 +78,13 @@ case class PhashLatExpr(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): PhashLatExpr = copy(child = c)
 }
 
-/** Static bridge for the PIP refine filter: rings looked up by polygon id
-  * in a reference-held map (driver-built once; rides the codegen references
-  * array — small: the cover side, not the point side).
+/** Static bridge for the PIP refine filter: rings looked up by polygon
+  * index in a reference-held array (driver-built once; rides the codegen
+  * references array — small: the cover side, not the point side).
   */
 object PipLookup {
-  def contains(px: Long, py: Long, id: String, polys: java.util.HashMap[String, PolyM]): Boolean = {
-    val p = polys.get(id)
-    p != null && Raycast.contains(px, py, p)
-  }
-
-  /** Index variant: zero-allocation hot path. The string-keyed variant costs
-    * a UTF8String→String allocation + string hash per PROBED row; at 24M
+  /** Zero-allocation hot path. A string-keyed lookup cost a
+    * UTF8String→String allocation + string hash per PROBED row; at 24M
     * probes that allocation rate collapsed multi-core scaling (measured:
     * stage CPU 27→60 core-s going 4→32 threads, 9 s GC). Arrays + ints keep
     * the refine loop allocation-free inside whole-stage codegen.
@@ -122,31 +117,30 @@ case class RaycastPipIdxExpr(lon: Expression, lat: Expression, polyIdx: Expressi
     copy(lon = f, lat = s, polyIdx = t)
 }
 
-/** Exact integer ray-cast PIP refine: `pip(lonMicro, latMicro, polyId)`.
-  * The reference's per-snapshot polygon test
-  * [ref: oshdb-util/…/geometry/fip/FastPointInPolygon.java] re-expressed as
-  * a whole-stage-codegen-friendly expression — the per-row work stays inside
-  * the generated loop; the polygon table is an addReferenceObj, not a
-  * closure, so no serialization per batch.
+/** `raycast_pip_bytes(lonMicro, latMicro, polyBytes)` — exact integer
+  * ray-cast PIP refine against rings carried on the row itself in the
+  * [[graft.core.PolyBytes]] wire form. The reference's per-snapshot polygon
+  * test [ref: oshdb-util/…/geometry/fip/FastPointInPolygon.java] run on the
+  * encoded bytes in place (Raycast.classifyBytes), so a join whose polygon
+  * side is a table refines inside the generated loop with no Row decode and
+  * no lookup. A null ring column (FULL cover cells ship none) yields null.
   */
-case class RaycastPipExpr(lon: Expression, lat: Expression, polyId: Expression,
-                          polys: java.util.HashMap[String, PolyM])
+case class RaycastPipBytesExpr(lon: Expression, lat: Expression, poly: Expression)
     extends TernaryExpression {
   override def nullIntolerant: Boolean = true
   override def first: Expression = lon
   override def second: Expression = lat
-  override def third: Expression = polyId
+  override def third: Expression = poly
   override def dataType: DataType = BooleanType
-  override def prettyName: String = "raycast_pip"
-  override protected def nullSafeEval(l: Any, la: Any, id: Any): Any =
-    PipLookup.contains(l.asInstanceOf[Long], la.asInstanceOf[Long], id.toString, polys)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mapRef = ctx.addReferenceObj("pipPolys", polys, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, (l, la, id) =>
-      s"${ev.value} = graft.functions.PipLookup$$.MODULE$$.contains($l, $la, $id.toString(), $mapRef);")
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): RaycastPipExpr =
-    copy(lon = f, lat = s, polyId = t)
+  override def prettyName: String = "raycast_pip_bytes"
+  override protected def nullSafeEval(l: Any, la: Any, b: Any): Any =
+    Raycast.classifyBytes(l.asInstanceOf[Long], la.asInstanceOf[Long],
+      b.asInstanceOf[Array[Byte]]) != 0
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (l, la, b) =>
+      s"${ev.value} = graft.core.Raycast$$.MODULE$$.classifyBytes($l, $la, $b) != 0;")
+  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): RaycastPipBytesExpr =
+    copy(lon = f, lat = s, poly = t)
 }
 
 /** Equirect web-tile x/y (integer-exact, oracle-expressible) and Mercator
@@ -202,11 +196,10 @@ object GraftFunctions {
     column(RingCellsExpr(expression(lonMicro), expression(latMicro), level, r, wrapX))
   def phashLon(phash: Column): Column = column(PhashLonExpr(expression(phash)))
   def phashLat(phash: Column): Column = column(PhashLatExpr(expression(phash)))
-  def raycastPip(lon: Column, lat: Column, polyId: Column,
-                 polys: java.util.HashMap[String, PolyM]): Column =
-    column(RaycastPipExpr(expression(lon), expression(lat), expression(polyId), polys))
   def raycastPipIdx(lon: Column, lat: Column, polyIdx: Column, polys: Array[PolyM]): Column =
     column(RaycastPipIdxExpr(expression(lon), expression(lat), expression(polyIdx), polys))
+  def raycastPipBytes(lon: Column, lat: Column, polyBytes: Column): Column =
+    column(RaycastPipBytesExpr(expression(lon), expression(lat), expression(polyBytes)))
   def tileX(lonMicro: Column, z: Int): Column = column(TileXExpr(expression(lonMicro), z))
   def tileY(latMicro: Column, z: Int): Column = column(TileYExpr(expression(latMicro), z))
   def mercTileX(lonMicro: Column, z: Int): Column = column(MercTileXExpr(expression(lonMicro), z))

@@ -728,8 +728,9 @@ object GridRaster {
     * occupied density raster into Black (n ≥ `minCount`) / White cells
     * and count the rook-adjacent pairs by color — BB ≫ expected means the
     * hot class clumps, BW ≫ expected means a checkerboard. One row:
-    * (n_black, n_white, bb, bw, ww, n_pairs); the expectations under the
-    * free-sampling null (E[BB] = J·p_B², etc.) are consumer arithmetic.
+    * (n_black, n_white, bb, bw, ww, n_pairs), all zero for an empty input;
+    * the expectations under the free-sampling null (E[BB] = J·p_B², etc.)
+    * are consumer arithmetic.
     * Adjacency is OVER THE OCCUPIED SURFACE (empty cells are absent, not
     * White — the [[flowAccumulation]] convention), so the statistic reads
     * the pattern of density GIVEN presence.
@@ -758,12 +759,14 @@ object GridRaster {
     val pairs = cells.select(col("k").as("ka"), col("b").as("ba"),
         explode(array(col("k") + K, col("k") + 1L)).as("kb"))
       .join(cells.select(col("k").as("kb"), col("b").as("bb_")), "kb")
-    val census = cells.agg(sum("b").as("n_black"),
-      (count(lit(1)) - sum("b")).as("n_white"))
+    // sums over no rows are NULL; an empty raster reads as all zeros
+    def sum0(c: Column): Column = coalesce(sum(c), lit(0L))
+    val census = cells.agg(sum0(col("b")).as("n_black"),
+      (count(lit(1)) - sum0(col("b"))).as("n_white"))
     pairs.agg(
-        sum(col("ba") * col("bb_")).as("bb"),
-        sum(when(col("ba") =!= col("bb_"), 1L).otherwise(0L)).as("bw"),
-        sum(when(col("ba") === 0L && col("bb_") === 0L, 1L)
+        sum0(col("ba") * col("bb_")).as("bb"),
+        sum0(when(col("ba") =!= col("bb_"), 1L).otherwise(0L)).as("bw"),
+        sum0(when(col("ba") === 0L && col("bb_") === 0L, 1L)
           .otherwise(0L)).as("ww"),
         count(lit(1)).as("n_pairs"))
       .crossJoin(broadcast(census))

@@ -57,8 +57,9 @@ object MapMatch {
                      segs: DataFrame, sId: Column,
                      x1: Column, y1: Column, x2: Column, y2: Column,
                      radiusMicro: Long, level: Int): DataFrame =
-    candidatePairs(spark, points, pId, pLon, pLat, segs, sId,
-        x1, y1, x2, y2, radiusMicro, level)
+    candidatePairs(spark, points.select(pId.cast("long").as("qid"),
+        pLon.cast("long").as("_plon"), pLat.cast("long").as("_plat")),
+        segs, sId, x1, y1, x2, y2, radiusMicro, level)
       .groupBy("qid")
       .agg(graft.functions.ArgMinLongsAgg.argminLongs(
         struct(col("_d2q"), col("_sid"), col("_snapx"), col("_snapy"))).as("_best"))
@@ -68,11 +69,11 @@ object MapMatch {
 
   /** Shared candidate kernel: all (point, segment) pairs with ⌊d²⌋ ≤ r² —
     * the cover-cell join + fixed IEEE chain of [[snapToSegments]]'s
-    * scaladoc, each pair produced exactly once. Returns
-    * (qid, _sid, _d2q, _snapx, _snapy).
+    * scaladoc, each pair produced exactly once. `points` holds long
+    * `_plon`/`_plat` and any key columns; returns those key columns, then
+    * (_sid, _d2q, _snapx, _snapy).
     */
   private def candidatePairs(spark: SparkSession, points: DataFrame,
-                             pId: Column, pLon: Column, pLat: Column,
                              segs: DataFrame, sId: Column,
                              x1: Column, y1: Column, x2: Column, y2: Column,
                              radiusMicro: Long, level: Int): DataFrame = {
@@ -80,8 +81,8 @@ object MapMatch {
     require(level >= 1 && level <= 16, "level must be in [1, 16]")
     import spark.implicits._
 
-    val pts = points.select(pId.cast("long").as("qid"),
-        pLon.cast("long").as("_plon"), pLat.cast("long").as("_plat"))
+    val keys = points.columns.filterNot(c => c == "_plon" || c == "_plat")
+    val pts = points
       .withColumn("_cell",
         graft.functions.GraftFunctions.zcell(col("_plon"), col("_plat"), level))
 
@@ -119,7 +120,7 @@ object MapMatch {
       .withColumn("_snapx", floor(col("_x1").cast("double") + t * dx).cast("long"))
       .withColumn("_snapy", floor(col("_y1").cast("double") + t * dy).cast("long"))
       .where(col("_d2q") <= lit(r * r))
-      .select("qid", "_sid", "_d2q", "_snapx", "_snapy")
+      .select((keys ++ Seq("_sid", "_d2q", "_snapx", "_snapy")).map(col): _*)
   }
 
   /** HMM/VITERBI map matching [Newson & Krakauer 2009, deterministic
@@ -163,12 +164,17 @@ object MapMatch {
     val fx = fixes.select(entity.cast("long").as("ent"),
       tUs.cast("long").as("tus"), orderId.cast("long").as("oid"),
       lon.cast("long").as("x"), lat.cast("long").as("y"))
-    val cand = candidatePairs(spark, fx, col("oid"), col("x"), col("y"),
+    // candidates are keyed by the whole fix, so entities that reuse an oid
+    // never see each other's candidates; the set drops the copies that
+    // duplicate fix rows would add
+    val fixKey = Seq("ent", "tus", "oid", "x", "y")
+    val cand = candidatePairs(spark,
+        fx.select(fixKey.map(col) ++ Seq(col("x").as("_plon"), col("y").as("_plat")): _*),
         segs, sId, x1, y1, x2, y2, radiusMicro, level)
-      .groupBy(col("qid").as("oid"))
-      .agg(collect_list(struct(col("_d2q").as("d2q"), col("_sid").as("sid")))
+      .groupBy(fixKey.map(col): _*)
+      .agg(collect_set(struct(col("_d2q").as("d2q"), col("_sid").as("sid")))
         .as("cands"))
-    val seqd = fx.join(cand, Seq("oid"), "left")
+    val seqd = fx.join(cand, fixKey, "left")
       .select(col("ent"), struct(col("tus"), col("oid"),
         coalesce(col("cands"), expr(
           "cast(array() as array<struct<d2q: bigint, sid: bigint>>)"))

@@ -236,7 +236,8 @@ object PointPattern {
     * is arithmetic, never materialized), so sum_n2 over empties adds 0
     * and n_quadrats carries the zeros' weight exactly.
     *
-    * Output: one row — (n_quadrats, n_occupied, n_points, sum_n2).
+    * Output: one row — (n_quadrats, n_occupied, n_points, sum_n2); all
+    * zero for an empty input.
     *
     * Plan: one hash aggregate to quadrat counts, one single-row
     * aggregate over the (occupied-only) quadrat table + a bbox
@@ -253,11 +254,13 @@ object PointPattern {
     val counts = p.groupBy("qx", "qy").agg(count(lit(1)).as("n"))
     val frame = p.agg(min("qx").as("x0"), max("qx").as("x1"),
       min("qy").as("y0"), max("qy").as("y1"))
-    counts.agg(count(lit(1)).as("n_occupied"), sum("n").as("n_points"),
-        sum(col("n") * col("n")).as("sum_n2"))
+    // an empty pattern has no frame and empty sums: one all-zero row
+    counts.agg(count(lit(1)).as("n_occupied"),
+        coalesce(sum("n"), lit(0L)).as("n_points"),
+        coalesce(sum(col("n") * col("n")), lit(0L)).as("sum_n2"))
       .crossJoin(broadcast(frame))
-      .select(((col("x1") - col("x0") + 1L) *
-          (col("y1") - col("y0") + 1L)).as("n_quadrats"),
+      .select(coalesce((col("x1") - col("x0") + 1L) *
+          (col("y1") - col("y0") + 1L), lit(0L)).as("n_quadrats"),
         col("n_occupied"), col("n_points"), col("sum_n2"))
   }
 

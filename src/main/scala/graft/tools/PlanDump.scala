@@ -93,10 +93,12 @@ object PlanDump {
     dump("Distributed polygon-side spatial join (q0l, round 3)",
       "The polygon side is a TABLE of (poly_id, wkb): cover cells computed " +
         "in a flatMap on executors (SerializeFromObject — the driver does " +
-        "zero geometry work), shuffle equi-join on the level-tagged cell " +
-        "long, refine in a mapPartitions raycast against rings shipped on " +
-        "PARTIAL cover rows (FULL cells carry null geometry and skip the " +
-        "refine).",
+        "zero geometry work), equi-join on the level-tagged cell long whose " +
+        "condition is the refine `_full OR raycast_pip_bytes(lon, lat, _poly)`: " +
+        "a codegen raycast over the ring bytes shipped on PARTIAL cover rows " +
+        "(FULL cells carry null geometry and skip it). The point side has no " +
+        "DeserializeToObject: scan, cell explode, join and refine stay in " +
+        "whole-stage codegen.",
       {
         val cpts = spark.read.parquet(s"$sf/customer.parquet")
           .select(col("c_custkey"),

@@ -23,6 +23,9 @@ object SparkTestSession {
   }
 }
 
+/** Walks a physical plan through adaptive query stages. */
+object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 class FlagshipSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -146,6 +149,82 @@ class FlagshipSpec extends AnyFunSuite {
     // no row-by-row duplicates either (seam halves must not double-match)
     val cnt = SpatialJoin.joinDf(spark, imgs, col("lon"), col("lat"), polyDf).count()
     assert(cnt === SpatialJoin.join(spark, imgs, col("lon"), col("lat"), specs).count())
+  }
+
+  test("joinDf: output is the point columns plus poly_id, also on empty inputs") {
+    val imgs = Fixtures.images(spark, 1000)
+      .withColumn("lon", phashLon(col("phash")))
+      .withColumn("lat", phashLat(col("phash")))
+    val want = imgs.columns.toSeq :+ "poly_id"
+    val polyDf = Fixtures.polygonsDf(spark)
+    val full = SpatialJoin.joinDf(spark, imgs, col("lon"), col("lat"), polyDf)
+    assert(full.columns.toSeq === want)
+    assert(full.schema("poly_id").dataType === org.apache.spark.sql.types.StringType)
+    val noPolys = SpatialJoin.joinDf(spark, imgs, col("lon"), col("lat"),
+      Fixtures.polygonsDf(spark, Array.empty[graft.fixtures.PolySpec]))
+    val noPoints = SpatialJoin.joinDf(spark, imgs.where(lit(false)),
+      col("lon"), col("lat"), polyDf)
+    for (df <- Seq(noPolys, noPoints)) {
+      assert(df.columns.toSeq === want)
+      assert(df.schema === full.schema)
+      assert(df.count() === 0L)
+    }
+  }
+
+  test("joinDf == join where several polygons share PARTIAL cells; the refine is the join condition") {
+    val s = spark
+    import s.implicits._
+    def rect(x0: Long, y0: Long, x1: Long, y1: Long) =
+      PolyM(Array(RingM(Array(x0, x1, x1, x0), Array(y0, y0, y1, y1))))
+    val specs = Array(
+      graft.fixtures.PolySpec("west", "t", rect(0L, 0L, 1000000L, 1000000L)),
+      graft.fixtures.PolySpec("east", "t", rect(1000000L, 0L, 2000000L, 1000000L)),
+      // a 100-µdeg sliver across the shared edge
+      graft.fixtures.PolySpec("sliver", "t", rect(999950L, -200000L, 1000050L, 1200000L)),
+      graft.fixtures.PolySpec("holed", "t", PolyM(Array(
+        rect(500000L, 500000L, 1500000L, 1500000L).rings(0),
+        rect(900000L, 900000L, 1100000L, 1100000L).rings(0)))))
+    // precondition: some cover cell is PARTIAL for two or more polygons
+    val partial = SpatialJoin.cover(specs).rows.filterNot(_._5)
+      .groupBy(r => (r._3, r._4)).values.map(_.map(_._1).distinct.size)
+    assert(partial.exists(_ >= 2), "fixture must share PARTIAL cells")
+    // a lattice plus points on, and 1 µdeg off, every shared edge
+    val lattice = for (x <- -50000L to 2050000L by 25000L;
+                       y <- -250000L to 1550000L by 25000L) yield (x, y)
+    val edges = for (x <- Seq(999949L, 999950L, 999951L, 999999L, 1000000L,
+                              1000001L, 1000049L, 1000050L, 1000051L);
+                     y <- -250000L to 1550000L by 50000L) yield (x, y)
+    val coords = lattice ++ edges
+    val pts = coords.zipWithIndex
+      .map { case ((x, y), i) => (i.toLong, x, y) }.toDF("pid", "lon", "lat")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("pid", "poly_id").as[(Long, String)].collect().toSeq.sorted
+    val viaDf = SpatialJoin.joinDf(spark, pts, col("lon"), col("lat"),
+      Fixtures.polygonsDf(spark, specs))
+    val got = pairs(viaDf)
+    val want = pairs(SpatialJoin.join(spark, pts, col("lon"), col("lat"), specs))
+    assert(got === want)
+    assert(want.map(_._2).distinct.size === 4)
+    // a point on the west/east edge inside the sliver is in all three
+    val onEdge = coords.indexOf((1000000L, 250000L)).toLong
+    assert(want.filter(_._1 == onEdge).map(_._2) === Seq("east", "sliver", "west"))
+
+    // the refine runs as the cell join's condition, and nothing decodes
+    // the point side into objects
+    viaDf.collect() // settles the adaptive plan
+    val plan = viaDf.queryExecution.executedPlan
+    val joins = PlanWalk.collect(plan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if j.leftKeys.exists(_.references.exists(_.name == "_lc")) => j
+    }
+    assert(joins.size === 1, plan.toString)
+    val j = joins.head
+    assert(j.condition.exists(_.exists(_.prettyName == "raycast_pip_bytes")), j.toString)
+    val pointSide = Seq(j.left, j.right).filter(_.output.exists(_.name == "_lon_r"))
+    assert(pointSide.size === 1)
+    assert(PlanWalk.collect(pointSide.head) {
+      case d: org.apache.spark.sql.execution.DeserializeToObjectExec => d
+    }.isEmpty, plan.toString)
   }
 
   test("tile clip: distributed plan, pieces stay in-tile, areas sum to the polygon") {

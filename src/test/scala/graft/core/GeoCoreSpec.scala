@@ -150,6 +150,79 @@ class RaycastSpec extends AnyFunSuite {
   }
 }
 
+/** Raycast.classifyBytes reads the PolyBytes wire form in place — its own
+  * walk over rings and byte offsets around the edge test it shares with
+  * classify, so it must agree with classify on every point, boundary cases
+  * above all.
+  */
+class RaycastBytesSpec extends AnyFunSuite {
+  private def assertParity(poly: PolyM, pts: Iterator[(Long, Long)]): Int = {
+    val bytes = PolyBytes.toBytes(poly)
+    var n = 0
+    pts.foreach { case (x, y) =>
+      assert(Raycast.classifyBytes(x, y, bytes) == Raycast.classify(x, y, poly),
+        s"disagree at ($x,$y) poly=${poly.bbox}")
+      n += 1
+    }
+    n
+  }
+
+  /** Each vertex, its four 1-µdeg neighbours, and each edge midpoint. */
+  private def boundaryPoints(poly: PolyM): Iterator[(Long, Long)] =
+    poly.rings.iterator.flatMap { r =>
+      r.xs.indices.iterator.flatMap { i =>
+        val (x, y) = (r.xs(i), r.ys(i))
+        val j = (i + 1) % r.xs.length
+        Iterator((x, y), (x + 1, y), (x - 1, y), (x, y + 1), (x, y - 1),
+          ((x + r.xs(j)) / 2, (y + r.ys(j)) / 2))
+      }
+    }
+
+  test("classifyBytes == classify on seeded multi-shell polygons with holes") {
+    val seen = Array(0, 0, 0)
+    Det.forAll(200, 11) { r =>
+      val cx = r.nextLong(320000001L) - 160000000L
+      val cy = r.nextLong(140000001L) - 70000000L
+      val rad = 20000L + r.nextLong(2000000L)
+      // 1–3 shells side by side, each with or without a hole
+      val shells = (0 until 1 + r.nextInt(3)).map { k =>
+        TestPolys.irregular(cx + k * 3 * rad, cy, rad, 3 + r.nextInt(20),
+          r.nextLong(), hole = r.nextBoolean())
+      }
+      val poly = PolyM(shells.flatMap(_.rings).toArray)
+      val b = poly.bbox
+      val inBox = Iterator.fill(200)((
+        b.lonMin + r.nextLong(b.lonMax - b.lonMin + 1),
+        b.latMin + r.nextLong(b.latMax - b.latMin + 1)))
+      assertParity(poly, boundaryPoints(poly) ++ inBox)
+      (boundaryPoints(poly) ++ Iterator((b.lonMin, b.latMin), (cx, cy)))
+        .foreach { case (x, y) => seen(Raycast.classify(x, y, poly)) += 1 }
+    }
+    // the sample must reach every class: outside, inside and on-edge
+    assert(seen.forall(_ > 0), seen.mkString(","))
+  }
+
+  test("classifyBytes == classify on the square and hole fixtures") {
+    val sq = PolyM(Array(RingM(Array(0L, 1000L, 1000L, 0L), Array(0L, 0L, 1000L, 1000L))))
+    val withHole = PolyM(Array(
+      RingM(Array(0L, 1000L, 1000L, 0L), Array(0L, 0L, 1000L, 1000L)),
+      RingM(Array(400L, 600L, 600L, 400L), Array(400L, 400L, 600L, 600L))))
+    // every pairing of the edge coordinates, their ±1 neighbours and
+    // interior/exterior values
+    val ticks = Seq(-1L, 0L, 1L, 200L, 399L, 400L, 401L, 500L, 599L, 600L,
+      601L, 999L, 1000L, 1001L)
+    for (poly <- Seq(sq, withHole)) {
+      val grid = for (x <- ticks.iterator; y <- ticks.iterator) yield (x, y)
+      assertParity(poly, boundaryPoints(poly) ++ grid)
+    }
+    val b = PolyBytes.toBytes(withHole)
+    assert(Raycast.classifyBytes(500, 500, b) == 0)
+    assert(Raycast.classifyBytes(400, 500, b) == 2)
+    assert(Raycast.classifyBytes(200, 200, b) == 1)
+    assert(Raycast.classifyBytes(0, 0, PolyBytes.toBytes(sq)) == 2)
+  }
+}
+
 class PolyCoverSpec extends AnyFunSuite {
   test("cover ⊇ polygon: every raycast-inside point falls in a cover cell") {
     Det.forAll(60, 9) { r =>

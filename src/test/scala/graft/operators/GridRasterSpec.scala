@@ -832,4 +832,20 @@ class GridRasterSpec extends AnyFunSuite {
     val nb = color.values.sum; val nw = color.size - nb
     assert(run(pts, 2L) === ((nb, nw, bb, bw, ww, np)))
   }
+
+  test("joinCounts: an empty input gives one all-zero row, long columns") {
+    def run(pts: Seq[(Long, Long)]) =
+      GridRaster.joinCounts(pts.toDF("x", "y"), col("x"), col("y"), 1000000L, 2L)
+    val empty = run(Seq.empty)
+    // points outside the raster are dropped before the counts: empty too
+    val outside = run(Seq((400000000L, 0L)))
+    val one = run(Seq((5L, 5L)))
+    for (df <- Seq(empty, outside)) {
+      assert(df.schema.map(f => (f.name, f.dataType)) ===
+        one.schema.map(f => (f.name, f.dataType)))
+      assert(df.schema.forall(_.dataType == org.apache.spark.sql.types.LongType))
+      assert(df.collect().map(r => (0 until 6).map(r.getLong)).toSeq ===
+        Seq(Seq.fill(6)(0L)))
+    }
+  }
 }

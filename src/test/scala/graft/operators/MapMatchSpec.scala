@@ -203,4 +203,22 @@ class MapMatchSpec extends AnyFunSuite {
       assert(totals === expect.filter(_._2 >= 0), s"lam=$lam")
     }
   }
+
+  test("viterbi: entities reusing the same oids match as if each ran alone") {
+    // entity 1 walks road 1 (y = 0), entity 2 walks road 2 (y = 5000), far
+    // outside each other's radius; both number their fixes 100, 101, 102
+    val segs = Seq((1L, 0L, 0L, 10000L, 0L), (2L, 0L, 5000L, 10000L, 5000L))
+    val e1 = (0 until 3).map(i => (1L, i.toLong, 100L + i, 1000L * i, 20L * i))
+    val e2 = (0 until 3).map(i => (2L, i.toLong, 100L + i, 1000L * i, 5000L - 30L * i))
+    def run(f: Seq[(Long, Long, Long, Long, Long)]) =
+      runViterbi(f, segs, r = 400L, level = 12, lam = 1000000L).toSeq.sorted
+    val both = run(e1 ++ e2)
+    assert(both === (run(e1) ++ run(e2)).sorted)
+    assert(both.filter(_._1 == 1L).map(_._4).toSet === Set(1L))
+    assert(both.filter(_._1 == 2L).map(_._4).toSet === Set(2L))
+    // a duplicated fix row gets its own candidates once, not twice
+    val dup = run(e1 :+ e1.head)
+    assert(dup.map(_._4).toSet === Set(1L))
+    assert(dup.count(_._3 == 100L) === 2)
+  }
 }

@@ -281,4 +281,17 @@ class PointPatternSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got2.toSeq === Seq((20L, 20L, 20L, 20L)))
   }
+
+  test("quadratCounts: an empty pattern gives one all-zero row, long columns") {
+    import spark.implicits._
+    val empty = PointPattern.quadratCounts(Seq.empty[(Long, Long)].toDF("x", "y"),
+      col("x"), col("y"), 1000000L)
+    val one = PointPattern.quadratCounts(Seq((5L, 5L)).toDF("x", "y"),
+      col("x"), col("y"), 1000000L)
+    assert(empty.schema.map(f => (f.name, f.dataType)) ===
+      one.schema.map(f => (f.name, f.dataType)))
+    assert(empty.schema.forall(_.dataType == org.apache.spark.sql.types.LongType))
+    assert(empty.collect().map(r => (0 until 4).map(r.getLong)).toSeq ===
+      Seq(Seq(0L, 0L, 0L, 0L)))
+  }
 }
