@@ -12,6 +12,14 @@ import org.apache.spark.sql.functions._
   * reference's per-cell-partial + combiner contract (SURVEY.md D, O5), so
   * every reducer here inherits map-side combine and whole-stage codegen.
   *
+  * Aggregates of one `Reducer` joined back on its keys run as ONE pass:
+  * `r.count().join(r.sum(x), keys)` plans a single Aggregate over one scan
+  * of `df`, not one per reducer (`countUniq`, a DISTINCT aggregate, keeps
+  * its own pass; [[graft.plans.MergeKeyedAggregates]],
+  * which [[Reducer.on]] installs on the DataFrame's session). The rule
+  * then stays on that session and rewrites any such join, also in queries
+  * that never use a Reducer.
+  *
   * Numeric policy: sums/averages go through exact DECIMAL accumulation and
   * are cast to double ONCE at the end — bit-identical across engines and
   * row orders (no float-summation order sensitivity), which is what makes
@@ -41,9 +49,9 @@ final case class Reducer(df: DataFrame, keys: Seq[(String, Column)]) {
   /** D3 */
   def average(c: Column, as: String = "avg"): DataFrame =
     grouped.agg((sumDec(c).cast("double") / org.apache.spark.sql.functions.count(c)).as(as))
-  /** D4: Σwx/Σw */
+  /** D4: Σwx/Σw; NULL for a group whose weights sum to 0. */
   def weightedAverage(x: Column, w: Column, as: String = "wavg"): DataFrame =
-    grouped.agg((sumDec(x * w).cast("double") / sumDec(w).cast("double")).as(as))
+    grouped.agg(try_divide(sumDec(x * w).cast("double"), sumDec(w).cast("double")).as(as))
   /** D5: exact distinct set — surfaced as distinct rows (set-as-rows keeps
     * oracle comparison well-defined; the reference returns Set<X>). */
   def uniq(c: Column, as: String = "val"): DataFrame =
@@ -108,5 +116,8 @@ final case class Reducer(df: DataFrame, keys: Seq[(String, Column)]) {
 }
 
 object Reducer {
-  def on(df: DataFrame): Reducer = Reducer(df, Seq.empty)
+  def on(df: DataFrame): Reducer = {
+    graft.plans.MergeKeyedAggregates.install(df.sparkSession)
+    Reducer(df, Seq.empty)
+  }
 }

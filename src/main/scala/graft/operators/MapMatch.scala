@@ -153,6 +153,10 @@ object MapMatch {
     * map-only kernel over ONE entity exchange — O(fixes · C) time,
     * O(fixes · C) memory per entity, both bounded by the radius and the
     * per-entity fix count (cap upstream for pathological entities).
+    *
+    * Every fix must carry an entity: the DP throws an
+    * `IllegalArgumentException` naming `viterbiMatch` when it meets the
+    * NULL-entity group, which fails the query (filter such fixes first).
     */
   def viterbiMatch(spark: SparkSession, fixes: DataFrame, entity: Column,
                    tUs: Column, orderId: Column, lon: Column, lat: Column,
@@ -198,6 +202,8 @@ object MapMatch {
     val lam = switchPenalty
     seqd.mapPartitions { it =>
       it.flatMap { row =>
+        if (row.isNullAt(0)) throw new IllegalArgumentException(
+          "viterbiMatch: a fix has a NULL entity; filter such fixes before matching")
         val ent = row.getLong(0)
         val seq = row.getSeq[org.apache.spark.sql.Row](1)
         val INF = Long.MaxValue / 4

@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.BenchCore
+import graft.api.Reducer
 import graft.fixtures.Fixtures
 import graft.functions.GraftFunctions._
 import graft.operators.{Dedup, Similarity, SpatialJoin}
@@ -90,6 +91,10 @@ object PlanDump {
           .select(col("qid"), posexplode(col("_tk")))
       })
 
+    val custPts = spark.read.parquet(s"$sf/customer.parquet")
+      .select(col("c_custkey"),
+        graft.oracle.Derive.lonMicro(col("c_custkey")).as("lonm"),
+        graft.oracle.Derive.latMicro(col("c_custkey")).as("latm"))
     dump("Distributed polygon-side spatial join (q0l, round 3)",
       "The polygon side is a TABLE of (poly_id, wkb): cover cells computed " +
         "in a flatMap on executors (SerializeFromObject — the driver does " +
@@ -99,13 +104,20 @@ object PlanDump {
         "(FULL cells carry null geometry and skip it). The point side has no " +
         "DeserializeToObject: scan, cell explode, join and refine stay in " +
         "whole-stage codegen.",
+      SpatialJoin.joinDf(spark, custPts, col("lonm"), col("latm"),
+        Fixtures.polygonsDf(spark, graft.oracle.Derive.rectSpecs)))
+
+    dump("Aggregate-by-geometry, several reducers in one pass",
+      "Reducer count, exact decimal sum and KLL sketch median of one joinDf " +
+        "result, joined back on the zone: MergeKeyedAggregates plans them as " +
+        "ONE aggregate (partial and final ObjectHashAggregate around one " +
+        "exchange) over ONE cell join whose condition is still the refine — " +
+        "not one cover build, cell join and raycast per reducer.",
       {
-        val cpts = spark.read.parquet(s"$sf/customer.parquet")
-          .select(col("c_custkey"),
-            graft.oracle.Derive.lonMicro(col("c_custkey")).as("lonm"),
-            graft.oracle.Derive.latMicro(col("c_custkey")).as("latm"))
-        SpatialJoin.joinDf(spark, cpts, col("lonm"), col("latm"),
-          Fixtures.polygonsDf(spark, graft.oracle.Derive.rectSpecs))
+        val r = Reducer.on(SpatialJoin.joinDf(spark, custPts, col("lonm"), col("latm"),
+          Fixtures.polygonsDf(spark, graft.oracle.Derive.rectSpecs))).aggregateBy("zone", col("poly_id"))
+        r.count("cnt").join(r.sum(col("c_custkey"), "total"), Seq("zone"))
+          .join(r.sketchQuantile(col("c_custkey"), 0.5, "q50"), Seq("zone"))
       })
 
     dump("Haversine radius join (q0i, round 3)",
@@ -239,10 +251,6 @@ object PlanDump {
         "vec_id", "embedding", k = 10, nprobe = 8, lloydRounds = 1,
         keep = col("vec_id") % 7 === 3))
 
-    val custPts = spark.read.parquet(s"$sf/customer.parquet")
-      .select(col("c_custkey"),
-        graft.oracle.Derive.lonMicro(col("c_custkey")).as("lonm"),
-        graft.oracle.Derive.latMicro(col("c_custkey")).as("latm"))
     dump("Map matching — nearest segment within radius (q7t, round 5)",
       "NO broadcast (both sides table-sized): segments explode to " +
         "radius-expanded bbox cover cells, points compute ONE cell, one " +

@@ -25,6 +25,14 @@ class ReducerSpec extends AnyFunSuite {
       .map(x => (x.getString(0), x.getDouble(1))).toSet == Set(("a", 1.5), ("b", 10.0)))
   }
 
+  test("weightedAverage is NULL for a group whose weights sum to 0") {
+    // ANSI division by a zero weight sum would fail the whole query
+    val zero = Seq(("a", 1.0, 0.0), ("b", 3.0, 2.0), ("c", 2.0, 0.0)).toDF("k", "x", "w")
+    val got = Reducer.on(zero).aggregateBy("k", $"k").weightedAverage($"x", $"w", "wa")
+      .collect().map(x => x.getString(0) -> Option(x.get(1))).toMap
+    assert(got == Map("a" -> None, "b" -> Some(3.0), "c" -> None))
+  }
+
   test("uniq and countUniq") {
     val r = Reducer.on(df).aggregateBy("k", $"k")
     assert(r.uniq($"x", "v").collect().map(x => (x.getString(0), x.getDouble(1))).toSet ==

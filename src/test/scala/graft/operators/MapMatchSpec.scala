@@ -221,4 +221,20 @@ class MapMatchSpec extends AnyFunSuite {
     assert(dup.map(_._4).toSet === Set(1L))
     assert(dup.count(_._3 == 100L) === 2)
   }
+
+  test("viterbi: a NULL entity fails with a named IllegalArgumentException") {
+    val segs = Seq((1L, 0L, 0L, 10000L, 0L))
+    val fixes = Seq[(java.lang.Long, Long, Long, Long, Long)](
+      (1L, 0L, 100L, 1000L, 20L), (null, 1L, 101L, 2000L, 40L))
+    val err = intercept[Exception] {
+      MapMatch.viterbiMatch(spark, fixes.toDF("ent", "tus", "oid", "x", "y"),
+        col("ent"), col("tus"), col("oid"), col("x"), col("y"),
+        segs.toDF("sid", "x1", "y1", "x2", "y2"),
+        col("sid"), col("x1"), col("y1"), col("x2"), col("y2"),
+        radiusMicro = 400L, level = 12, switchPenalty = 1000000L).collect()
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("viterbiMatch: a fix has a NULL entity")), causes.mkString("\n"))
+  }
 }
