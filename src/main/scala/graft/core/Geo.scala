@@ -10,8 +10,8 @@ package graft.core
   * (≤ 2.6e17 << 9.2e18), so ray-cast point-in-polygon and all cell math are
   * exact integer arithmetic end-to-end — no float tolerance anywhere in a
   * predicate. 1 micro-degree ≈ 0.11 m at the equator, far below the task's
-  * geometric resolution. Doubles appear only at the JTS boundary (cover
-  * computation, clipping) and in metric outputs (area/length/PSNR).
+  * geometric resolution. Doubles appear only at the JTS boundary (WKB,
+  * seam splitting, clipping) and in metric outputs (area/length/PSNR).
   */
 object FixedPoint {
   val MICRO: Long = 1000000L
@@ -98,14 +98,16 @@ object ZGrid {
   /** Inclusive micro-degree bbox of cell (z, x, y). Max edge belongs to the
     * next cell except at the world edge (clamping in xAt/yAt).
     */
-  def cellBBox(z: Int, x: Long, y: Long): BBoxM = {
-    // ceil-divide the range so [lonMin(x), lonMin(x+1)) tiles exactly
-    val lonLo = LON_MIN + ceilDiv(x * LON_RANGE, 1L << z)
-    val lonHi = LON_MIN + ceilDiv((x + 1) * LON_RANGE, 1L << z) - 1
-    val latLo = LAT_MIN + ceilDiv(y * LAT_RANGE, 1L << z)
-    val latHi = LAT_MIN + ceilDiv((y + 1) * LAT_RANGE, 1L << z) - 1
-    BBoxM(lonLo, latLo, lonHi, latHi)
-  }
+  def cellBBox(z: Int, x: Long, y: Long): BBoxM =
+    BBoxM(cellLon(z, x), cellLat(z, y), cellLon(z, x + 1) - 1, cellLat(z, y + 1) - 1)
+
+  /** West edge of cell column x at level z: the least longitude with
+    * xAt == x (ceil-divided, so [cellLon(x), cellLon(x+1)) tiles exactly);
+    * x = 2^z gives the world's east edge, 180e6.
+    */
+  @inline def cellLon(z: Int, x: Long): Long = LON_MIN + ceilDiv(x * LON_RANGE, 1L << z)
+  /** South edge of cell row y at level z; y = 2^z gives 90e6. */
+  @inline def cellLat(z: Int, y: Long): Long = LAT_MIN + ceilDiv(y * LAT_RANGE, 1L << z)
 
   @inline private def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
 
@@ -219,7 +221,7 @@ final case class RingM(xs: Array[Long], ys: Array[Long]) {
   * islands-in-holes) — crossing parity makes them the same object, so the
   * raycast kernel and the join path need no multi-polygon special case.
   * Shell/hole structure is recovered only where JTS needs it
-  * (Jts.toJtsEvenOdd, for cover-cell classification / clipping); built from
+  * (Jts.toJtsEvenOdd, for seam splitting / clipping); built from
   * ways or WKB via graft.core.RingAssembly (H1).
   */
 final case class PolyM(rings: Array[RingM]) {
@@ -231,26 +233,6 @@ final case class PolyM(rings: Array[RingM]) {
       if (r.ys(i) < la) la = r.ys(i); if (r.ys(i) > ha) ha = r.ys(i)
     }
     BBoxM(lo, la, ho, ha)
-  }
-}
-
-/** Compact wire form for PolyM (ring count, per-ring vertex count + coord
-  * longs, big-endian) — the refine side of the DISTRIBUTED cover join
-  * carries polygon rings on partial cover rows, and Raycast.classifyBytes
-  * reads them in place per probe (no JTS objects, no decoded copy).
-  */
-object PolyBytes {
-  def toBytes(p: PolyM): Array[Byte] = {
-    var size = 4
-    p.rings.foreach(r => size += 4 + 16 * r.xs.length)
-    val bb = java.nio.ByteBuffer.allocate(size)
-    bb.putInt(p.rings.length)
-    p.rings.foreach { r =>
-      bb.putInt(r.xs.length)
-      var i = 0
-      while (i < r.xs.length) { bb.putLong(r.xs(i)); bb.putLong(r.ys(i)); i += 1 }
-    }
-    bb.array()
   }
 }
 
@@ -269,7 +251,7 @@ object PolyBytes {
 object Raycast {
   /** One ring edge (x1, y1)-(x2, y2) against the point: 2 if the point lies
     * on the edge, 1 if a ray from the point to +x crosses it, else 0. The
-    * whole integer test, shared by [[classify]] and [[classifyBytes]].
+    * whole integer test, shared by [[classify]] and [[classifyEdges]].
     */
   @inline private def edge(px: Long, py: Long, x1: Long, y1: Long, x2: Long, y2: Long): Int = {
     // on-segment test: collinear and within the segment's bbox
@@ -308,44 +290,28 @@ object Raycast {
     if ((crossings & 1) == 1) 1 else 0
   }
 
-  // Big-endian views of a byte[] (the PolyBytes layout), read in place
-  // with no wrapper object per call.
-  private[this] val IntBE =
-    java.lang.invoke.MethodHandles.byteArrayViewVarHandle(classOf[Array[Int]], java.nio.ByteOrder.BIG_ENDIAN)
-  private[this] val LongBE =
-    java.lang.invoke.MethodHandles.byteArrayViewVarHandle(classOf[Array[Long]], java.nio.ByteOrder.BIG_ENDIAN)
-
-  /** [[classify]] over the [[PolyBytes]] wire form, read in place: each
-    * vertex is read at its byte offset, with no PolyM built and nothing
-    * allocated — the refine of a join whose rows carry ring bytes calls
-    * this per row.
+  /** [[classify]] over a flat edge list, `(x1, y1, x2, y2)` per edge, in
+    * `edges(0 until end)`. For a point that a [[CoverCell]] receives, its
+    * edge list gives the same answer as the whole polygon: the list holds
+    * every ring edge that reaches the cell's row band and does not lie
+    * wholly west of the cell, and no other edge can touch the point or
+    * cross its ray to +x. The refine of a join whose PARTIAL cover rows
+    * carry those lists calls this per row.
     */
-  def classifyBytes(px: Long, py: Long, bytes: Array[Byte]): Int = {
-    val nr = IntBE.get(bytes, 0): Int
+  def classifyEdges(px: Long, py: Long, edges: Array[Long], end: Int): Int = {
     var crossings = 0
-    var off = 4 // offset of the current ring's vertex count
-    var ri = 0
-    while (ri < nr) {
-      val n = IntBE.get(bytes, off): Int
-      val first = off + 4
-      val end = first + 16 * n
-      var x1 = LongBE.get(bytes, end - 16): Long
-      var y1 = LongBE.get(bytes, end - 8): Long
-      var p = first
-      while (p < end) {
-        val x2 = LongBE.get(bytes, p): Long
-        val y2 = LongBE.get(bytes, p + 8): Long
-        val e = edge(px, py, x1, y1, x2, y2)
-        if (e == 2) return 2
-        crossings += e
-        x1 = x2; y1 = y2
-        p += 16
-      }
-      off = end
-      ri += 1
+    var p = 0
+    while (p < end) {
+      val e = edge(px, py, edges(p), edges(p + 1), edges(p + 2), edges(p + 3))
+      if (e == 2) return 2
+      crossings += e
+      p += 4
     }
     if ((crossings & 1) == 1) 1 else 0
   }
+
+  def classifyEdges(px: Long, py: Long, edges: Array[Long]): Int =
+    classifyEdges(px, py, edges, edges.length)
 
   /** Boundary-inclusive containment (the join predicate). */
   @inline def contains(px: Long, py: Long, poly: PolyM): Boolean =

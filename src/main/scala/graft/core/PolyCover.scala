@@ -46,9 +46,10 @@ object Jts {
     * → proper JTS Polygon/MultiPolygon. Ring parity by nesting depth of each
     * ring's strict INTERIOR point (robust to rings sharing boundary
     * vertices/edges): even depth = shell, odd = hole, a hole belongs to its
-    * innermost containing shell. This is what lets PolyCover classify cover
-    * cells for multipolygons — the raycast refine needs no conversion
-    * (even-odd crossing counting handles multiple shells natively).
+    * innermost containing shell. This is what lets seam splitting and
+    * clipping take multipolygons — the cover and the raycast refine need no
+    * conversion (even-odd crossing counting handles multiple shells
+    * natively).
     */
   def toJtsEvenOdd(p: PolyM): Geometry = {
     val rings = p.rings
@@ -129,12 +130,22 @@ object Jts {
   }
 }
 
-/** One cover cell of a polygon: morton id at `level`, and whether the cell
-  * is FULLY covered by the polygon (points there skip the exact PIP refine —
-  * the reference's fully-inside fast path
+/** One cover cell of a polygon: morton id at `level`. A FULL cell lies
+  * wholly inside the polygon and carries no edges (points there skip the
+  * exact PIP refine — the reference's fully-inside fast path
   * [ref: oshdb-util/…/geometry/fip/FastBboxInPolygon.java], SURVEY.md O3).
+  *
+  * A PARTIAL cell carries `edges`, its clipped edge list `(x1, y1, x2, y2)*`:
+  * every ring edge that reaches the cell's row band [south edge, north
+  * edge + 1] and whose max x is at least the cell's west edge. No other
+  * edge can touch a point the cell receives or cross its ray to +x, so
+  * [[Raycast.classifyEdges]] over the list equals [[Raycast.classify]] over
+  * the whole polygon there. The band's extra µdeg row keeps that exact for
+  * points at lat 90e6, which [[ZGrid.yAt]] clamps into the top row.
   */
-final case class CoverCell(level: Int, morton: Long, full: Boolean)
+final case class CoverCell(level: Int, morton: Long, edges: Array[Long]) {
+  def full: Boolean = edges == null
+}
 
 /** Plan-time polygon → cover-cells computation (runs on the driver over the
   * polygon side only — the BIG side never does geometry work it can skip).
@@ -150,6 +161,11 @@ final case class CoverCell(level: Int, morton: Long, full: Boolean)
   * polygon is covered at the FINEST level whose cover stays under
   * `cellBudget`, so large polygons get coarse cells (no cover explosion)
   * and small polygons get tight cells (high join selectivity).
+  *
+  * Cells are classified from the ring edges alone, in int64, with no
+  * geometry predicate per cell — Raptor's (VLDB 2019) edge/scanline
+  * classification, with GeoBlocks' (EDBT 2021) split into FULL cells and
+  * PARTIAL boundary cells that alone are refined.
   */
 object PolyCover {
   val DEFAULT_BUDGET = 256
@@ -163,27 +179,112 @@ object PolyCover {
   }
 
   /** Cover one polygon at its chosen level. Guarantees cover ⊇ polygon:
-    * every point with Raycast.contains == true lies in some emitted cell
-    * (cells are classified with JTS `intersects`/`covers` on the exact
-    * double lift of the same integer coordinates).
+    * every point with Raycast.contains == true lies in some emitted cell,
+    * and every point a FULL cell receives is Raycast-inside.
     */
   def cover(poly: PolyM, cellBudget: Int = DEFAULT_BUDGET): Array[CoverCell] = {
     val z = chooseLevel(poly.bbox, cellBudget)
     coverAt(poly, z)
   }
 
+  /** Cover at level z, in one pass over the ring edges.
+    *
+    * Each cell stands for the closed box of points it receives: its
+    * [[ZGrid.cellBBox]], stretched to lon 180e6 in the last column and to
+    * lat 90e6 in the top row, where xAt/yAt clamp the world edge. Edges are
+    * bucketed once into the row bands of [[CoverCell]]. A cell is PARTIAL
+    * iff one of its band's edges touches its box (an integer segment–box
+    * test, run only over the columns the edge spans). A box no edge
+    * touches lies wholly inside or wholly outside, so one
+    * [[Raycast.classifyEdges]] of its corner against the band's edges
+    * calls it FULL or leaves it out. Cells come out in [[ZGrid.bboxCells]]
+    * order.
+    */
   def coverAt(poly: PolyM, z: Int): Array[CoverCell] = {
-    // even-odd conversion: handles single polygons, holes, AND disjoint
-    // multi-shell sets in one path (H1/MultiPolygon support)
-    val jts = Jts.toJtsEvenOdd(poly)
-    val prep = Jts.prepare(jts)
-    val out = Array.newBuilder[CoverCell]
-    ZGrid.bboxCells(z, poly.bbox).foreach { case (x, y) =>
-      val cb = Jts.bboxToJts(ZGrid.cellBBox(z, x, y))
-      if (prep.covers(cb)) out += CoverCell(z, Morton.encode(x, y), full = true)
-      else if (prep.intersects(cb)) out += CoverCell(z, Morton.encode(x, y), full = false)
+    val b = poly.bbox
+    val x0 = ZGrid.xAt(z, b.lonMin); val y0 = ZGrid.yAt(z, b.latMin)
+    val nx = (ZGrid.xAt(z, b.lonMax) - x0 + 1).toInt
+    val ny = (ZGrid.yAt(z, b.latMax) - y0 + 1).toInt
+    val top = (1L << z) - 1
+    val colLon = Array.tabulate(nx + 1)(i => ZGrid.cellLon(z, x0 + i))
+    val rowLat = Array.tabulate(ny + 1)(j => ZGrid.cellLat(z, y0 + j))
+    // the east edge of column i's box and the north edge of row j's
+    def east(i: Int): Long = if (x0 + i == top) colLon(i + 1) else colLon(i + 1) - 1
+    def north(j: Int): Long = if (y0 + j == top) rowLat(j + 1) else rowLat(j + 1) - 1
+
+    val bands = Array.fill(ny)(Array.newBuilder[Long])
+    for (r <- poly.rings) {
+      val n = r.xs.length
+      var k = 0
+      while (k < n) {
+        val ax = r.xs(if (k == 0) n - 1 else k - 1); val ay = r.ys(if (k == 0) n - 1 else k - 1)
+        val bx = r.xs(k); val by = r.ys(k)
+        val lo = math.min(ay, by); val hi = math.max(ay, by)
+        var j = math.max(0L, ZGrid.yAt(z, lo) - y0 - 1).toInt
+        val j1 = (ZGrid.yAt(z, hi) - y0).toInt
+        while (j <= j1) {
+          if (lo <= rowLat(j + 1) && hi >= rowLat(j)) {
+            val band = bands(j)
+            band += ax; band += ay; band += bx; band += by
+          }
+          j += 1
+        }
+        k += 1
+      }
     }
-    out.result()
+
+    val grid = new Array[CoverCell](nx * ny)
+    var j = 0
+    while (j < ny) {
+      val band = bands(j).result()
+      val ne = band.length / 4
+      // edges by max x, descending: a cell's list is then a prefix
+      val edges = Array.range(0, ne).sortBy(e => -maxX(band, e))
+        .flatMap(e => band.slice(4 * e, 4 * e + 4))
+      val touched = new Array[Boolean](nx)
+      for (e <- 0 until ne) {
+        val ax = edges(4 * e); val ay = edges(4 * e + 1)
+        val bx = edges(4 * e + 2); val by = edges(4 * e + 3)
+        var i = (ZGrid.xAt(z, math.min(ax, bx)) - x0).toInt
+        val i1 = (ZGrid.xAt(z, math.max(ax, bx)) - x0).toInt
+        while (i <= i1) {
+          if (!touched(i) && touches(ax, ay, bx, by, colLon(i), rowLat(j), east(i), north(j)))
+            touched(i) = true
+          i += 1
+        }
+      }
+      var prefix = 0
+      var i = nx - 1
+      while (i >= 0) {
+        while (prefix < ne && maxX(edges, prefix) >= colLon(i)) prefix += 1
+        val m = Morton.encode(x0 + i, y0 + j)
+        grid(i * ny + j) =
+          if (touched(i)) CoverCell(z, m, java.util.Arrays.copyOf(edges, 4 * prefix))
+          else if (Raycast.classifyEdges(colLon(i), rowLat(j), edges, 4 * prefix) == 1)
+            CoverCell(z, m, null)
+          else null
+        i -= 1
+      }
+      j += 1
+    }
+    grid.filter(_ != null)
+  }
+
+  @inline private def maxX(edges: Array[Long], e: Int): Long = math.max(edges(4 * e), edges(4 * e + 2))
+
+  /** Whether segment a–b meets the closed box [x0, x1] × [y0, y1]: their
+    * bboxes overlap and the box's corners are not all strictly on one side
+    * of the segment's line (separating axes of a segment and a box; exact
+    * in int64 for micro-degree inputs).
+    */
+  private def touches(ax: Long, ay: Long, bx: Long, by: Long,
+                      x0: Long, y0: Long, x1: Long, y1: Long): Boolean = {
+    if (math.max(ax, bx) < x0 || math.min(ax, bx) > x1 ||
+        math.max(ay, by) < y0 || math.min(ay, by) > y1) return false
+    val dx = bx - ax; val dy = by - ay
+    def side(x: Long, y: Long): Int = java.lang.Long.signum(dx * (y - ay) - (x - ax) * dy)
+    val s = side(x0, y0) + side(x1, y0) + side(x0, y1) + side(x1, y1)
+    s != 4 && s != -4
   }
 
   /** Cover at a FIXED level for all polygons, as compact morton ranges:

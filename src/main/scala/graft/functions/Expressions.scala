@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import graft.core.{PolyM, Raycast, ZGrid, PhashLoc, TileMath}
 
@@ -117,30 +118,31 @@ case class RaycastPipIdxExpr(lon: Expression, lat: Expression, polyIdx: Expressi
     copy(lon = f, lat = s, polyIdx = t)
 }
 
-/** `raycast_pip_bytes(lonMicro, latMicro, polyBytes)` — exact integer
-  * ray-cast PIP refine against rings carried on the row itself in the
-  * [[graft.core.PolyBytes]] wire form. The reference's per-snapshot polygon
-  * test [ref: oshdb-util/…/geometry/fip/FastPointInPolygon.java] run on the
-  * encoded bytes in place (Raycast.classifyBytes), so a join whose polygon
-  * side is a table refines inside the generated loop with no Row decode and
-  * no lookup. A null ring column (FULL cover cells ship none) yields null.
+/** `raycast_pip_edges(lonMicro, latMicro, edges)` — exact integer
+  * ray-cast PIP refine against the clipped edge list a PARTIAL cover row
+  * carries (see [[graft.core.CoverCell]]): the reference's per-snapshot
+  * polygon test [ref: oshdb-util/…/geometry/fip/FastPointInPolygon.java]
+  * run over the few edges of the point's cell (Raycast.classifyEdges), so a
+  * join whose polygon side is a table refines inside the generated loop
+  * with no Row decode and no lookup. A null edge list (FULL cover cells
+  * ship none) yields null.
   */
-case class RaycastPipBytesExpr(lon: Expression, lat: Expression, poly: Expression)
+case class RaycastPipEdgesExpr(lon: Expression, lat: Expression, edges: Expression)
     extends TernaryExpression {
   override def nullIntolerant: Boolean = true
   override def first: Expression = lon
   override def second: Expression = lat
-  override def third: Expression = poly
+  override def third: Expression = edges
   override def dataType: DataType = BooleanType
-  override def prettyName: String = "raycast_pip_bytes"
-  override protected def nullSafeEval(l: Any, la: Any, b: Any): Any =
-    Raycast.classifyBytes(l.asInstanceOf[Long], la.asInstanceOf[Long],
-      b.asInstanceOf[Array[Byte]]) != 0
+  override def prettyName: String = "raycast_pip_edges"
+  override protected def nullSafeEval(l: Any, la: Any, e: Any): Any =
+    Raycast.classifyEdges(l.asInstanceOf[Long], la.asInstanceOf[Long],
+      e.asInstanceOf[ArrayData].toLongArray()) != 0
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, la, b) =>
-      s"${ev.value} = graft.core.Raycast$$.MODULE$$.classifyBytes($l, $la, $b) != 0;")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): RaycastPipBytesExpr =
-    copy(lon = f, lat = s, poly = t)
+    nullSafeCodeGen(ctx, ev, (l, la, e) =>
+      s"${ev.value} = graft.core.Raycast$$.MODULE$$.classifyEdges($l, $la, $e.toLongArray()) != 0;")
+  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): RaycastPipEdgesExpr =
+    copy(lon = f, lat = s, edges = t)
 }
 
 /** Equirect web-tile x/y (integer-exact, oracle-expressible) and Mercator
@@ -198,8 +200,8 @@ object GraftFunctions {
   def phashLat(phash: Column): Column = column(PhashLatExpr(expression(phash)))
   def raycastPipIdx(lon: Column, lat: Column, polyIdx: Column, polys: Array[PolyM]): Column =
     column(RaycastPipIdxExpr(expression(lon), expression(lat), expression(polyIdx), polys))
-  def raycastPipBytes(lon: Column, lat: Column, polyBytes: Column): Column =
-    column(RaycastPipBytesExpr(expression(lon), expression(lat), expression(polyBytes)))
+  def raycastPipEdges(lon: Column, lat: Column, edges: Column): Column =
+    column(RaycastPipEdgesExpr(expression(lon), expression(lat), expression(edges)))
   def tileX(lonMicro: Column, z: Int): Column = column(TileXExpr(expression(lonMicro), z))
   def tileY(latMicro: Column, z: Int): Column = column(TileYExpr(expression(latMicro), z))
   def mercTileX(lonMicro: Column, z: Int): Column = column(MercTileXExpr(expression(lonMicro), z))

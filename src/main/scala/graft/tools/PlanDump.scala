@@ -99,9 +99,9 @@ object PlanDump {
       "The polygon side is a TABLE of (poly_id, wkb): cover cells computed " +
         "in a flatMap on executors (SerializeFromObject — the driver does " +
         "zero geometry work), equi-join on the level-tagged cell long whose " +
-        "condition is the refine `_full OR raycast_pip_bytes(lon, lat, _poly)`: " +
-        "a codegen raycast over the ring bytes shipped on PARTIAL cover rows " +
-        "(FULL cells carry null geometry and skip it). The point side has no " +
+        "condition is the refine `_full OR raycast_pip_edges(lon, lat, _edges)`: " +
+        "a codegen raycast over the clipped edge list shipped on PARTIAL cover " +
+        "rows (FULL cells carry null edges and skip it). The point side has no " +
         "DeserializeToObject: scan, cell explode, join and refine stay in " +
         "whole-stage codegen.",
       SpatialJoin.joinDf(spark, custPts, col("lonm"), col("latm"),

@@ -219,12 +219,50 @@ class FlagshipSpec extends AnyFunSuite {
     }
     assert(joins.size === 1, plan.toString)
     val j = joins.head
-    assert(j.condition.exists(_.exists(_.prettyName == "raycast_pip_bytes")), j.toString)
+    assert(j.condition.exists(_.exists(_.prettyName == "raycast_pip_edges")), j.toString)
     val pointSide = Seq(j.left, j.right).filter(_.output.exists(_.name == "_lon_r"))
     assert(pointSide.size === 1)
     assert(PlanWalk.collect(pointSide.head) {
       case d: org.apache.spark.sql.execution.DeserializeToObjectExec => d
     }.isEmpty, plan.toString)
+  }
+
+  test("world edge: points at lat ±90e6 and lon ±180e6 match join, joinDf and brute raycast") {
+    val s = spark
+    import s.implicits._
+    def poly(pts: (Long, Long)*) = PolyM(Array(RingM(pts.map(_._1).toArray, pts.map(_._2).toArray)))
+    val specs = Array(
+      // polar caps whose slanted sides cross the top (bottom) cell row
+      graft.fixtures.PolySpec("north", "t", poly((-20000000L, 90000000L), (20000000L, 90000000L),
+        (25000000L, 80000000L), (0L, 83000000L), (-25000000L, 80000000L))),
+      graft.fixtures.PolySpec("south", "t", poly((-25000000L, -80000000L), (25000000L, -80000000L),
+        (20000000L, -90000000L), (-20000000L, -90000000L))),
+      // a cap over every longitude, and shapes with an edge on the antimeridian
+      graft.fixtures.PolySpec("world", "t", poly((-180000000L, 90000000L), (180000000L, 90000000L),
+        (180000000L, 88000000L), (0L, 86000000L), (-180000000L, 88000000L))),
+      graft.fixtures.PolySpec("east", "t", poly((170000000L, -10000000L), (180000000L, -10000000L),
+        (180000000L, 10000000L), (175000000L, 4000000L))),
+      graft.fixtures.PolySpec("west", "t", poly((-180000000L, -5000000L), (-170000000L, 0L),
+        (-180000000L, 5000000L))))
+    val lons = (-26000000L to 26000000L by 1000000L) ++ Seq(-20000001L, 19999999L, 20000001L,
+      -180000000L, -179999999L, -170000001L, 169999999L, 179999999L, 180000000L)
+    val lats = Seq(-90000000L, -89999999L, 89999999L, 90000000L, 88000000L, 86000000L) ++
+      (-11000000L to 11000000L by 1000000L) ++ Seq(-5000001L, 4000001L, 5000001L)
+    val coords = for (x <- lons; y <- lats) yield (x, y)
+    val pts = coords.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }.toDF("pid", "lon", "lat")
+    val want = (for (((x, y), i) <- coords.zipWithIndex; sp <- specs
+                     if Raycast.contains(x, y, sp.poly)) yield (i.toLong, sp.poly_id)).sorted
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("pid", "poly_id").as[(Long, String)].collect().toSeq.sorted
+    assert(pairs(SpatialJoin.join(spark, pts, col("lon"), col("lat"), specs)) === want)
+    assert(pairs(SpatialJoin.joinDf(spark, pts, col("lon"), col("lat"),
+      Fixtures.polygonsDf(spark, specs))) === want)
+    // the fixture reaches the world edge from inside and from outside
+    val at = want.map { case (i, _) => coords(i.toInt) }
+    assert(at.count(_._2 == 90000000L) > 10 && at.count(_._2 == -90000000L) > 10, at)
+    assert(at.count(_._1 == 180000000L) > 10 && at.count(_._1 == -180000000L) > 5, at)
+    val past = coords.indexOf((22000000L, 90000000L)).toLong // east of north's slanted side
+    assert(want.filter(_._1 == past).map(_._2) === Seq("world"))
   }
 
   test("tile clip: distributed plan, pieces stay in-tile, areas sum to the polygon") {

@@ -81,6 +81,16 @@ class ZGridSpec extends AnyFunSuite {
 }
 
 object TestPolys {
+  /** Every ring edge of the polygon as the flat `(x1, y1, x2, y2)*` list
+    * Raycast.classifyEdges reads.
+    */
+  def edges(poly: PolyM): Array[Long] = poly.rings.flatMap { r =>
+    r.xs.indices.flatMap { i =>
+      val j = (i + 1) % r.xs.length
+      Seq(r.xs(i), r.ys(i), r.xs(j), r.ys(j))
+    }
+  }
+
   /** Deterministic irregular star-convex polygon around (cx, cy) micro-deg. */
   def irregular(cx: Long, cy: Long, rMicro: Long, nV: Int, seed: Long, hole: Boolean = false): PolyM = {
     val rnd = new Random(seed)
@@ -150,18 +160,27 @@ class RaycastSpec extends AnyFunSuite {
   }
 }
 
-/** Raycast.classifyBytes reads the PolyBytes wire form in place — its own
-  * walk over rings and byte offsets around the edge test it shares with
-  * classify, so it must agree with classify on every point, boundary cases
-  * above all.
+/** Raycast.classifyEdges walks a flat edge list around the edge test it
+  * shares with classify. Over a polygon's whole edge list, and over the
+  * clipped list of the cover cell a point falls in, it must agree with
+  * classify on every point, boundary cases above all.
   */
-class RaycastBytesSpec extends AnyFunSuite {
+class RaycastEdgesSpec extends AnyFunSuite {
   private def assertParity(poly: PolyM, pts: Iterator[(Long, Long)]): Int = {
-    val bytes = PolyBytes.toBytes(poly)
+    val all = TestPolys.edges(poly)
+    val cover = PolyCover.cover(poly)
+    val z = cover.head.level
+    val byCell = cover.map(c => c.morton -> c).toMap
     var n = 0
     pts.foreach { case (x, y) =>
-      assert(Raycast.classifyBytes(x, y, bytes) == Raycast.classify(x, y, poly),
-        s"disagree at ($x,$y) poly=${poly.bbox}")
+      val want = Raycast.classify(x, y, poly)
+      assert(Raycast.classifyEdges(x, y, all) == want, s"disagree at ($x,$y) poly=${poly.bbox}")
+      byCell.get(ZGrid.cellAt(z, x, y)) match {
+        case Some(c) if !c.full =>
+          assert(Raycast.classifyEdges(x, y, c.edges) == want, s"cell list disagrees at ($x,$y)")
+        case Some(_) => assert(want == 1, s"($x,$y) in a FULL cell is not inside")
+        case None => assert(want == 0, s"($x,$y) is in no cover cell")
+      }
       n += 1
     }
     n
@@ -178,7 +197,7 @@ class RaycastBytesSpec extends AnyFunSuite {
       }
     }
 
-  test("classifyBytes == classify on seeded multi-shell polygons with holes") {
+  test("classifyEdges == classify on seeded multi-shell polygons with holes") {
     val seen = Array(0, 0, 0)
     Det.forAll(200, 11) { r =>
       val cx = r.nextLong(320000001L) - 160000000L
@@ -202,7 +221,7 @@ class RaycastBytesSpec extends AnyFunSuite {
     assert(seen.forall(_ > 0), seen.mkString(","))
   }
 
-  test("classifyBytes == classify on the square and hole fixtures") {
+  test("classifyEdges == classify on the square and hole fixtures") {
     val sq = PolyM(Array(RingM(Array(0L, 1000L, 1000L, 0L), Array(0L, 0L, 1000L, 1000L))))
     val withHole = PolyM(Array(
       RingM(Array(0L, 1000L, 1000L, 0L), Array(0L, 0L, 1000L, 1000L)),
@@ -215,15 +234,154 @@ class RaycastBytesSpec extends AnyFunSuite {
       val grid = for (x <- ticks.iterator; y <- ticks.iterator) yield (x, y)
       assertParity(poly, boundaryPoints(poly) ++ grid)
     }
-    val b = PolyBytes.toBytes(withHole)
-    assert(Raycast.classifyBytes(500, 500, b) == 0)
-    assert(Raycast.classifyBytes(400, 500, b) == 2)
-    assert(Raycast.classifyBytes(200, 200, b) == 1)
-    assert(Raycast.classifyBytes(0, 0, PolyBytes.toBytes(sq)) == 2)
+    val e = TestPolys.edges(withHole)
+    assert(Raycast.classifyEdges(500, 500, e) == 0)
+    assert(Raycast.classifyEdges(400, 500, e) == 2)
+    assert(Raycast.classifyEdges(200, 200, e) == 1)
+    assert(Raycast.classifyEdges(0, 0, TestPolys.edges(sq)) == 2)
   }
 }
 
 class PolyCoverSpec extends AnyFunSuite {
+  /** The JTS classifier the integer cover replaced, kept as the reference:
+    * each cell's closed cellBBox, lifted to doubles, is FULL if the
+    * prepared polygon covers it and PARTIAL if it intersects it.
+    */
+  private def jtsCover(poly: PolyM, z: Int): Map[Long, Boolean] = {
+    val prep = Jts.prepare(Jts.toJtsEvenOdd(poly))
+    ZGrid.bboxCells(z, poly.bbox).flatMap { case (x, y) =>
+      val cb = Jts.bboxToJts(ZGrid.cellBBox(z, x, y))
+      if (prep.covers(cb)) Some(Morton.encode(x, y) -> true)
+      else if (prep.intersects(cb)) Some(Morton.encode(x, y) -> false)
+      else None
+    }.toMap
+  }
+
+  /** A cap from lat ±90e6 down to a wiggly edge, over lon [-w, w]. */
+  private def polarCap(w: Long, depth: Long, north: Boolean, n: Int, seed: Long): PolyM = {
+    val r = new Random(seed)
+    val pole = if (north) 90000000L else -90000000L
+    val sign = if (north) -1L else 1L
+    // top edge west → east, then the wiggly edge back east → west
+    val xs = Array(-w, w) ++ (0 to n).map(i => w - 2 * w * i / n)
+    val ys = Array(pole, pole) ++ (0 to n).map(_ => pole + sign * (depth / 2 + r.nextLong(depth / 2)))
+    PolyM(Array(RingM(xs, ys)))
+  }
+
+  /** Seeded single rings, holed rings, multi-shell sets, both halves of
+    * seam-crossing polygons, and polar caps reaching lat ±90e6 (one of
+    * them spanning the whole antimeridian-to-antimeridian width).
+    */
+  private lazy val fixtures: Seq[(String, PolyM)] = {
+    val r = new Random(21)
+    def centre() = (r.nextLong(320000001L) - 160000000L, r.nextLong(140000001L) - 70000000L)
+    val rings = (0 until 30).map { k =>
+      val (cx, cy) = centre()
+      s"ring $k" -> TestPolys.irregular(cx, cy, 50000L + r.nextLong(9950000L), 3 + r.nextInt(40), r.nextLong())
+    }
+    val holed = (0 until 15).map { k =>
+      val (cx, cy) = centre()
+      s"holed $k" -> TestPolys.irregular(cx, cy, 50000L + r.nextLong(9950000L), 3 + r.nextInt(40),
+        r.nextLong(), hole = true)
+    }
+    val multi = (0 until 15).map { k =>
+      val (cx, cy) = centre()
+      val rad = 20000L + r.nextLong(2000000L)
+      s"multi $k" -> PolyM((0 until 2 + r.nextInt(2)).flatMap { i =>
+        TestPolys.irregular(cx + i * 3 * rad, cy, rad, 3 + r.nextInt(20), r.nextLong(),
+          hole = r.nextBoolean()).rings
+      }.toArray)
+    }
+    val seam = (0 until 6).flatMap { k =>
+      val poly = graft.fixtures.Fixtures.irregular(180000000L, r.nextLong(120000001L) - 60000000L,
+        1000000L + r.nextLong(5000000L), 14, r.nextLong())
+      Jts.splitAtSeam(Jts.toJtsEvenOdd(poly)).map(Jts.fromJtsAny).zipWithIndex
+        .map { case (h, i) => s"seam $k half $i" -> h }
+    }
+    val caps = Seq(
+      "north cap" -> polarCap(30000000L, 10000000L, north = true, 12, 1),
+      "south cap" -> polarCap(5000000L, 3000000L, north = false, 7, 2),
+      "world cap" -> polarCap(180000000L, 20000000L, north = true, 40, 3))
+    rings ++ holed ++ multi ++ seam ++ caps
+  }
+
+  test("integer cover == JTS reference cells on seeded fixtures, FULL ⊆ reference FULL") {
+    var fulls = 0
+    for ((name, poly) <- fixtures; dz <- 0 to 1) {
+      val z = PolyCover.cover(poly).head.level + dz
+      val got = PolyCover.coverAt(poly, z).map(c => c.morton -> c.full).toMap
+      val want = jtsCover(poly, z)
+      assert(got.keySet == want.keySet, s"$name at z=$z: cell sets differ")
+      assert(got.forall { case (m, full) => !full || want(m) }, s"$name at z=$z: FULL ⊄ reference FULL")
+      fulls += got.count(_._2)
+    }
+    assert(fulls > 0, "fixtures must produce FULL cells")
+  }
+
+  test("a rectangle on cell lines: the cells on its west and south edges turn PARTIAL, none vanish") {
+    val z = 8
+    val (x0, y0, x1, y1) = (100L, 150L, 106L, 154L)
+    val rect = PolyM(Array(RingM(
+      Array(ZGrid.cellLon(z, x0), ZGrid.cellLon(z, x1), ZGrid.cellLon(z, x1), ZGrid.cellLon(z, x0)),
+      Array(ZGrid.cellLat(z, y0), ZGrid.cellLat(z, y0), ZGrid.cellLat(z, y1), ZGrid.cellLat(z, y1)))))
+    val got = PolyCover.coverAt(rect, z).map(c => (Morton.decodeX(c.morton), Morton.decodeY(c.morton)) -> c.full).toMap
+    val want = jtsCover(rect, z).map { case (m, f) => (Morton.decodeX(m), Morton.decodeY(m)) -> f }
+    assert(got.keySet == want.keySet)
+    for (((x, y), full) <- got) {
+      val edgeCell = x == x0 || y == y0 || x == x1 || y == y1
+      assert(full == !edgeCell, s"cell ($x,$y)")
+      if (x == x0 || y == y0) assert(want((x, y)) || x == x1 || y == y1, s"reference FULL at ($x,$y)")
+    }
+    assert(got.count(_._2) == (x1 - x0 - 1) * (y1 - y0 - 1))
+    assert(want.count(_._2) == (x1 - x0) * (y1 - y0))
+  }
+
+  test("each PARTIAL cell's edge list classifies every probe in the cell like the whole polygon") {
+    val seen = Array(0, 0, 0)
+    val r = new Random(23)
+    for ((name, poly) <- fixtures) {
+      val cells = PolyCover.cover(poly)
+      val z = cells.head.level
+      val byCell = cells.map(c => c.morton -> c).toMap
+      // every vertex, its ±1 µdeg neighbours and every edge midpoint
+      val polyProbes = poly.rings.toSeq.flatMap { ring =>
+        ring.xs.indices.flatMap { i =>
+          val (x, y) = (ring.xs(i), ring.ys(i))
+          val j = (i + 1) % ring.xs.length
+          Seq((x, y), (x + 1, y), (x - 1, y), (x, y + 1), (x, y - 1),
+            ((x + ring.xs(j)) / 2, (y + ring.ys(j)) / 2))
+        }
+      }
+      for ((px, py) <- polyProbes) {
+        val c = Raycast.classify(px, py, poly)
+        byCell.get(ZGrid.cellAt(z, px, py)) match {
+          case None => assert(c == 0, s"$name: ($px,$py) inside but in no cell")
+          case Some(cell) if cell.full => assert(c == 1, s"$name: ($px,$py) in a FULL cell")
+          case _ =>
+        }
+      }
+      val probesByCell = polyProbes.groupBy { case (x, y) => ZGrid.cellAt(z, x, y) }
+      for (cell <- cells if !cell.full) {
+        val (cx, cy) = (Morton.decodeX(cell.morton), Morton.decodeY(cell.morton))
+        val bb = ZGrid.cellBBox(z, cx, cy)
+        // the four corners, the points 1 µdeg past the north and east
+        // edges (the cell's own at the world edge), and seeded interior points
+        val corners = for (x <- Seq(bb.lonMin, bb.lonMax, bb.lonMax + 1);
+                           y <- Seq(bb.latMin, bb.latMax, bb.latMax + 1)) yield (x, y)
+        val inner = Seq.fill(20)((bb.lonMin + r.nextLong(bb.lonMax - bb.lonMin + 1),
+          bb.latMin + r.nextLong(bb.latMax - bb.latMin + 1)))
+        val probes = (probesByCell.getOrElse(cell.morton, Nil) ++ corners ++ inner)
+          .filter { case (x, y) => ZGrid.cellAt(z, x, y) == cell.morton }
+        for ((px, py) <- probes) {
+          val want = Raycast.classify(px, py, poly)
+          assert(Raycast.classifyEdges(px, py, cell.edges) == want, s"$name: cell ($cx,$cy) at ($px,$py)")
+          seen(want) += 1
+        }
+      }
+    }
+    assert(seen.forall(_ > 0), seen.mkString(","))
+  }
+
   test("cover ⊇ polygon: every raycast-inside point falls in a cover cell") {
     Det.forAll(60, 9) { r =>
       val poly = TestPolys.irregular(

@@ -141,7 +141,7 @@ class MergeKeyedAggregatesSpec extends AnyFunSuite {
     val plan = d.queryExecution.executedPlan
     val joins = PlanWalk.collect(plan) { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
     assert(joins.size === 1, plan.toString)
-    assert(joins.head.condition.exists(_.exists(_.prettyName == "raycast_pip_bytes")), plan.toString)
+    assert(joins.head.condition.exists(_.exists(_.prettyName == "raycast_pip_edges")), plan.toString)
   }
 
   test("installing twice leaves one rule") {
