@@ -286,24 +286,4 @@ object PolyCover {
     val s = side(x0, y0) + side(x1, y0) + side(x0, y1) + side(x1, y1)
     s != 4 && s != -4
   }
-
-  /** Cover at a FIXED level for all polygons, as compact morton ranges:
-    * contiguous runs of sibling FULL cells collapse into [lo, hi] ranges
-    * (z-order ⇒ a full parent = one contiguous child range). Used by the
-    * range-join variant at scale where per-polygon levels don't fit an
-    * equi-join. Returned ranges are inclusive.
-    */
-  def coverRanges(poly: PolyM, z: Int): Array[(Long, Long, Boolean)] = {
-    val cells = coverAt(poly, z).sortBy(_.morton)
-    val out = Array.newBuilder[(Long, Long, Boolean)]
-    var i = 0
-    while (i < cells.length) {
-      var j = i
-      while (j + 1 < cells.length && cells(j + 1).morton == cells(j).morton + 1 &&
-             cells(j + 1).full == cells(i).full) j += 1
-      out += ((cells(i).morton, cells(j).morton, cells(i).full))
-      i = j + 1
-    }
-    out.result()
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import graft.core.{PolyM, Raycast, ZGrid, PhashLoc, TileMath}
+import graft.core.{Raycast, ZGrid, PhashLoc, TileMath}
 
 /** Codegen-able Catalyst expressions for the hot integer kernels
   * (SURVEY.md §4 "custom Catalyst surface — deliberately minimal").
@@ -77,45 +77,6 @@ case class PhashLatExpr(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.core.PhashLoc$$.MODULE$$.latMicro($c)")
   override protected def withNewChildInternal(c: Expression): PhashLatExpr = copy(child = c)
-}
-
-/** Static bridge for the PIP refine filter: rings looked up by polygon
-  * index in a reference-held array (driver-built once; rides the codegen
-  * references array — small: the cover side, not the point side).
-  */
-object PipLookup {
-  /** Zero-allocation hot path. A string-keyed lookup cost a
-    * UTF8String→String allocation + string hash per PROBED row; at 24M
-    * probes that allocation rate collapsed multi-core scaling (measured:
-    * stage CPU 27→60 core-s going 4→32 threads, 9 s GC). Arrays + ints keep
-    * the refine loop allocation-free inside whole-stage codegen.
-    */
-  def containsIdx(px: Long, py: Long, idx: Int, polys: Array[PolyM]): Boolean =
-    idx >= 0 && idx < polys.length && Raycast.contains(px, py, polys(idx))
-}
-
-/** `raycast_pip_idx(lonMicro, latMicro, polyIdx)` — integer-indexed PIP
-  * refine (see PipLookup.containsIdx).
-  */
-case class RaycastPipIdxExpr(lon: Expression, lat: Expression, polyIdx: Expression,
-                             polys: Array[PolyM])
-    extends TernaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def first: Expression = lon
-  override def second: Expression = lat
-  override def third: Expression = polyIdx
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "raycast_pip_idx"
-  override protected def nullSafeEval(l: Any, la: Any, idx: Any): Any =
-    PipLookup.containsIdx(l.asInstanceOf[Long], la.asInstanceOf[Long],
-      idx.asInstanceOf[Int], polys)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val arrRef = ctx.addReferenceObj("pipPolyArr", polys, "graft.core.PolyM[]")
-    nullSafeCodeGen(ctx, ev, (l, la, idx) =>
-      s"${ev.value} = graft.functions.PipLookup$$.MODULE$$.containsIdx($l, $la, $idx, $arrRef);")
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): RaycastPipIdxExpr =
-    copy(lon = f, lat = s, polyIdx = t)
 }
 
 /** `raycast_pip_edges(lonMicro, latMicro, edges)` — exact integer
@@ -198,8 +159,6 @@ object GraftFunctions {
     column(RingCellsExpr(expression(lonMicro), expression(latMicro), level, r, wrapX))
   def phashLon(phash: Column): Column = column(PhashLonExpr(expression(phash)))
   def phashLat(phash: Column): Column = column(PhashLatExpr(expression(phash)))
-  def raycastPipIdx(lon: Column, lat: Column, polyIdx: Column, polys: Array[PolyM]): Column =
-    column(RaycastPipIdxExpr(expression(lon), expression(lat), expression(polyIdx), polys))
   def raycastPipEdges(lon: Column, lat: Column, edges: Column): Column =
     column(RaycastPipEdgesExpr(expression(lon), expression(lat), expression(edges)))
   def tileX(lonMicro: Column, z: Int): Column = column(TileXExpr(expression(lonMicro), z))

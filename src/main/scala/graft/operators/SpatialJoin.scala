@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryCollection, GeometryFactory, LineString}
 import graft.core._
 import graft.fixtures.PolySpec
 import graft.functions.GraftFunctions._
@@ -24,8 +25,9 @@ import graft.functions.GraftFunctions._
   *   3. equi-join on (level, cell): BROADCAST when the cover is small
   *      (it almost always is — polygons × ≤budget cells), else shuffle join
   *      with optional salting; AQE refines at runtime.
-  *   4. refine: `full OR raycast_pip_idx(lon, lat, poly_idx)` — exact
-  *      int64 kernel, whole-stage-codegen'd.
+  *   4. refine: `full OR raycast_pip_edges(lon, lat, edges)` — the exact
+  *      int64 kernel over the PARTIAL cell's clipped edge list, evaluated as
+  *      the join condition inside whole-stage codegen.
   *
   * Shuffle inventory: ZERO exchanges on the point side in broadcast mode —
   * the scan, cell computation, join, and refine fuse into one codegen stage.
@@ -44,8 +46,13 @@ object SpatialJoin {
     z
   }
 
-  final case class Cover(rows: Seq[(String, Int, Int, Long, Boolean)], levels: Array[Int],
-                         polyArr: Array[PolyM])
+  /** A polygon set's cover: per row (poly_id, polygon index, level, morton,
+    * full, edges), where edges is the PARTIAL cell's clipped edge list (null
+    * for a FULL cell, see [[CoverCell]]); the distinct levels; and the
+    * seam-normalized polygons by index, which the clip kernels read.
+    */
+  final case class Cover(rows: Seq[(String, Int, Int, Long, Boolean, Array[Long])],
+                         levels: Array[Int], polyArr: Array[PolyM])
 
   /** Seam normalization: specs authored with extended longitudes (a
     * ±180-crossing polygon like Fiji written as lon ∈ [178e6, 182e6]) split
@@ -61,16 +68,15 @@ object SpatialJoin {
         .map(g => PolySpec(s.poly_id, s.kind, Jts.fromJtsAny(g)))
     }
 
-  /** Driver-side cover computation for a polygon set. Polygons are indexed
-    * by position so the distributed refine runs on ints (see
-    * PipLookup.containsIdx — string ids allocated per probe killed scaling).
+  /** Driver-side cover computation for a polygon set, each polygon at its
+    * own level from `allowed`.
     */
   def cover(specs0: Array[PolySpec], budget: Int = PolyCover.DEFAULT_BUDGET,
             allowed: Array[Int] = DefaultLevels): Cover = {
     val specs = normalizeSeam(specs0)
     val rows = specs.toSeq.zipWithIndex.flatMap { case (s, i) =>
       val z = chooseAllowedLevel(s.poly.bbox, budget, allowed)
-      PolyCover.coverAt(s.poly, z).map(c => (s.poly_id, i, c.level, c.morton, c.full))
+      PolyCover.coverAt(s.poly, z).map(c => (s.poly_id, i, c.level, c.morton, c.full, c.edges))
     }
     Cover(rows, rows.map(_._3).distinct.sorted.toArray, specs.map(_.poly))
   }
@@ -87,7 +93,9 @@ object SpatialJoin {
 
   /** Join `points` (must expose micro-degree `lonCol`/`latCol`) with the
     * polygon set; output = point columns + `poly_id`, one row per
-    * (point, containing polygon) pair.
+    * (point, containing polygon) pair. The cover is built on the driver and
+    * its PARTIAL rows carry their cells' edge lists, so the probe refines
+    * over those few edges ([[cellJoin]]), as [[joinDf]] does.
     *
     * @param saltBuckets >1 replicates HOT cover cells and salts the point
     *        side — only useful in shuffle-join mode on skewed data.
@@ -97,47 +105,56 @@ object SpatialJoin {
            allowed: Array[Int] = DefaultLevels,
            broadcastThreshold: Long = 4000000L,
            saltBuckets: Int = 1): DataFrame = {
-    val c = cover(specs, budget, allowed)
     import spark.implicits._
+    require(saltBuckets <= 32, "key packing assumes saltBuckets<=32")
+    val c = cover(specs, budget, allowed)
+    val coverDf = c.rows.map { case (pid, _, lvl, cell, full, edges) =>
+      (pid, cellKey(lvl, cell), full, edges)
+    }.toDF("poly_id", "_lc", "_full", "_edges")
+    cellJoin(points, lonCol, latCol, coverDf, c.levels,
+      broadcastCover = c.rows.size <= broadcastThreshold && saltBuckets <= 1, saltBuckets)
+  }
 
-    val useBroadcast = c.rows.size <= broadcastThreshold && saltBuckets <= 1
-    // Single-long join key in EVERY mode: joins on one long build/probe a
-    // LongHashedRelation (broadcast) or shuffle on an 8-byte key — a
-    // 2-column struct key costs an UnsafeRow allocation per probed row,
-    // which measured as 28× stage-CPU at 24M probes. Packing: levels are
-    // ≤ MAX_LEVEL=16 ⇒ morton < 2^32, so (level<<34 | morton) < 2^39
-    // leaves low bits for the salt: key<<5 | salt (salt < 32) < 2^44.
-    require(c.levels.forall(_ <= PolyCover.MAX_LEVEL) && saltBuckets <= 32,
-      "key packing assumes level<=16 and saltBuckets<=32")
-    def packed(lvl: Int, cell: Long): Long = (lvl.toLong << 34) | cell
-    val coverDf0 = c.rows.map { case (pid, pidx, lvl, cell, full) =>
-      (pid, pidx, packed(lvl, cell), full)
-    }.toDF("poly_id", "_pidx", "_lc", "_full")
+  /** Key of cover cell `morton` at `level` — one long in every join mode:
+    * joins on one long build/probe a LongHashedRelation (broadcast) or
+    * shuffle on an 8-byte key, where a 2-column struct key costs an
+    * UnsafeRow allocation per probed row (measured as 28× stage-CPU at 24M
+    * probes). Levels ≤ MAX_LEVEL = 16 ⇒ morton < 2^32, so the key is
+    * < 2^39 and leaves low bits for the salt: key << 5 | salt < 2^44.
+    */
+  private def cellKey(level: Int, morton: Long): Long = {
+    require(level <= PolyCover.MAX_LEVEL, "key packing assumes level<=16")
+    (level.toLong << 34) | morton
+  }
 
-    // point side: one tagged cell per distinct cover level (tiny literal array)
-    val cellArr = array(c.levels.map(z =>
-      zcell(lonCol, latCol, z).bitwiseOR(lit(z.toLong << 34))): _*)
+  /** The cell join both [[join]] and [[joinDf]] run: each point explodes
+    * to its keyed cell at every level of `levels`, equi-joins `coverDf`
+    * (poly_id, _lc, _full, _edges) on `_lc` — broadcast, shuffled, or,
+    * with `saltBuckets` > 1, shuffled on a key salted `saltBuckets` ways
+    * (every cover row replicated, each point in one bucket) — and keeps a
+    * pair when its cell is FULL or the point lies inside the cell's edges.
+    * Catalyst makes that refine the join condition. Output: the columns of
+    * `points`, then `poly_id`.
+    */
+  private def cellJoin(points: DataFrame, lonCol: Column, latCol: Column, coverDf: DataFrame,
+                       levels: Array[Int], broadcastCover: Boolean, saltBuckets: Int): DataFrame = {
+    val cellArr = array(levels.map(z =>
+      zcell(lonCol, latCol, z).bitwiseOR(lit(cellKey(z, 0L)))): _*)
     val ptsExpl = points.withColumn("_lc", explode(cellArr))
-
     val joined =
-      if (useBroadcast)
-        ptsExpl.join(broadcast(coverDf0), Seq("_lc"), "inner")
+      if (broadcastCover) ptsExpl.join(broadcast(coverDf), Seq("_lc"))
       else if (saltBuckets > 1) {
-        // replicate every cover row saltBuckets ways; points pick one
-        // bucket — still ONE long join key: (_lc << 5) | salt
-        val coverSalted = coverDf0
+        val coverSalted = coverDf
           .withColumn("_lc", explode(array((0 until saltBuckets).map(s =>
             shiftleft(col("_lc"), 5).bitwiseOR(lit(s.toLong))): _*)))
         val ptsSalted = ptsExpl
           .withColumn("_lc", shiftleft(col("_lc"), 5)
             .bitwiseOR(pmod(hash(lonCol, latCol), lit(saltBuckets)).cast("long")))
-        ptsSalted.join(coverSalted, Seq("_lc"), "inner")
-      } else
-        ptsExpl.join(coverDf0, Seq("_lc"), "inner")
-
+        ptsSalted.join(coverSalted, Seq("_lc"))
+      } else ptsExpl.join(coverDf, Seq("_lc"))
     joined
-      .where($"_full" || raycastPipIdx(lonCol, latCol, $"_pidx", c.polyArr))
-      .drop("_pidx", "_lc", "_full")
+      .where(col("_full") || raycastPipEdges(lonCol, latCol, col("_edges")))
+      .drop("_lc", "_full", "_edges")
   }
 
   /** C2 with a TABLE-SIZED polygon side: `polyDf` is a DataFrame of
@@ -157,38 +174,32 @@ object SpatialJoin {
     * Output: the columns of `points`, then `poly_id`; one row per
     * (point, containing polygon), the same rows as [[join]].
     *
-    * Trade-off vs [[join]] (documented): geometry is shipped to the probe
-    * on the cover rows — the classic ship-geometry-to-probe layout; the
-    * alternative (re-join candidates to geometry by id) costs a second
-    * shuffle of the much larger candidate set. What a PARTIAL row ships is
-    * only its row band's edges from the cell's west edge eastward, not the
-    * whole ring, so the cover rows grow with the boundary's length per row
-    * band, not with the polygon's size per cell. Point side explodes to
-    * ALL `allowed` levels (constant ≤ 4) because the level set is not known
-    * without an extra polygon pass.
+    * Geometry is shipped to the probe on the cover rows — the classic
+    * ship-geometry-to-probe layout; the alternative (re-join candidates to
+    * geometry by id) costs a second shuffle of the much larger candidate
+    * set. What a PARTIAL row ships is only its row band's edges from the
+    * cell's west edge eastward, not the whole ring, so the cover rows grow
+    * with the boundary's length per row band, not with the polygon's size
+    * per cell. Unlike [[join]], the point side explodes to ALL `allowed`
+    * levels (constant ≤ 4) because the level set is not known without an
+    * extra polygon pass, and the join takes no hint.
     */
   def joinDf(spark: SparkSession, points: DataFrame, lonCol: Column, latCol: Column,
              polyDf: DataFrame, budget: Int = PolyCover.DEFAULT_BUDGET,
              allowed: Array[Int] = DefaultLevels): DataFrame = {
     import spark.implicits._
-    require(allowed.forall(_ <= PolyCover.MAX_LEVEL), "packing assumes level<=16")
     val coverDf = polyDf.select(col("poly_id"), col("wkb"))
       .as[(String, Array[Byte])]
       .flatMap { case (pid, wkb) =>
         Jts.splitAtSeam(Jts.fromWkb(wkb)).flatMap { half =>
           val poly = Jts.fromJtsAny(half)
           val z = chooseAllowedLevel(poly.bbox, budget, allowed)
-          PolyCover.coverAt(poly, z).map(c => (pid, (z.toLong << 34) | c.morton, c.full, c.edges))
+          PolyCover.coverAt(poly, z).map(c => (pid, cellKey(z, c.morton), c.full, c.edges))
         }
       }.toDF("poly_id", "_lc", "_full", "_edges")
-
-    val cellArr = array(allowed.map(z =>
-      zcell(lonCol, latCol, z).bitwiseOR(lit(z.toLong << 34))): _*)
-    val ptsExpl = points.withColumn("_lon_r", lonCol).withColumn("_lat_r", latCol)
-      .withColumn("_lc", explode(cellArr))
-    ptsExpl.join(coverDf, Seq("_lc"))
-      .where(col("_full") || raycastPipEdges(col("_lon_r"), col("_lat_r"), col("_edges")))
-      .drop("_lc", "_full", "_edges", "_lon_r", "_lat_r")
+    val pts = points.withColumn("_lon_r", lonCol).withColumn("_lat_r", latCol)
+    cellJoin(pts, col("_lon_r"), col("_lat_r"), coverDf, allowed,
+      broadcastCover = false, saltBuckets = 1).drop("_lon_r", "_lat_r")
   }
 
   /** Raster↔vector tile assignment (SURVEY.md C5): add web-tile ids.
@@ -235,7 +246,7 @@ object SpatialJoin {
     *
     * Scale: the segment side never shuffles except the pair-distinct
     * (rows = candidate pairs, 5 longs each) and the per-zone aggregate;
-    * geometry ships in the task closure exactly like the raycast refine.
+    * the zone geometry ships in the task closure.
     */
   def clipLengthJoin(spark: SparkSession, segs: DataFrame, segCol: Column,
                      x1: Column, y1: Column, x2: Column, y2: Column,
@@ -245,51 +256,21 @@ object SpatialJoin {
                      unit: String = "udeg"): DataFrame = {
     val meters = unitIsMeters(unit)
     import spark.implicits._
-    val c = cover(specs, budget, allowed)
-    require(c.levels.forall(_ <= PolyCover.MAX_LEVEL), "key packing assumes level<=16")
-    def packed(lvl: Int, cell: Long): Long = (lvl.toLong << 34) | cell
-    val coverDf = c.rows.map { case (pid, pidx, lvl, cell, _) =>
-      (pid, pidx, packed(lvl, cell))
-    }.toDF("poly_id", "_pidx", "_lc")
-
-    val levels = c.levels
     val prepared = segs.select(segCol.cast("long").as("_sid"), x1.cast("long").as("_x1"),
       y1.cast("long").as("_y1"), x2.cast("long").as("_x2"), y2.cast("long").as("_y2"))
-    // bbox cover cells of each segment at every distinct zone cover level
-    val exploded = prepared.flatMap { r =>
+    val clipped = clipPairs(prepared, least(col("_x1"), col("_x2")), least(col("_y1"), col("_y2")),
+        greatest(col("_x1"), col("_x2")), greatest(col("_y1"), col("_y2")),
+        cover(specs, budget, allowed)) { (r, zone, gf) =>
       val (sx1, sy1, sx2, sy2) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-      val b = BBoxM(math.min(sx1, sx2), math.min(sy1, sy2),
-        math.max(sx1, sx2), math.max(sy1, sy2))
-      levels.iterator.flatMap { z =>
-        ZGrid.bboxCells(z, b).map { case (cx, cy) =>
-          (r.getLong(0), sx1, sy1, sx2, sy2, packed(z, Morton.encode(cx, cy)))
-        }
+      val len = zone match {
+        case b: BBoxM =>
+          if (meters) slabClipLenMeters(sx1, sy1, sx2, sy2, b)
+          else slabClipLen(sx1, sy1, sx2, sy2, b)
+        case g: Geometry =>
+          if (meters) jtsClipLenMeters(gf, sx1, sy1, sx2, sy2, g)
+          else jtsClipLen(gf, sx1, sy1, sx2, sy2, g)
       }
-    }.toDF("_sid", "_x1", "_y1", "_x2", "_y2", "_lc")
-
-    val pairs = exploded.join(broadcast(coverDf), Seq("_lc"))
-      .select("_sid", "_x1", "_y1", "_x2", "_y2", "_pidx", "poly_id")
-      .distinct()
-
-    val polyArr = c.polyArr
-    val clipped = pairs.mapPartitions { it =>
-      // per-task geometry cache: rect fast path precomputed, JTS parsed once
-      val kinds = new Array[AnyRef](polyArr.length)
-      val gf = new org.locationtech.jts.geom.GeometryFactory()
-      it.map { r =>
-        val (sx1, sy1, sx2, sy2) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-        val pidx = r.getInt(5)
-        if (kinds(pidx) == null) kinds(pidx) = classifyZone(polyArr(pidx))
-        val len = kinds(pidx) match {
-          case b: BBoxM =>
-            if (meters) slabClipLenMeters(sx1, sy1, sx2, sy2, b)
-            else slabClipLen(sx1, sy1, sx2, sy2, b)
-          case g: org.locationtech.jts.geom.Geometry =>
-            if (meters) jtsClipLenMeters(gf, sx1, sy1, sx2, sy2, g)
-            else jtsClipLen(gf, sx1, sy1, sx2, sy2, g)
-        }
-        (r.getString(6), len)
-      }
+      (r.getString(5), len)
     }.toDF("poly_id", "_len")
 
     clipped.where(col("_len") > 0.0)
@@ -324,57 +305,12 @@ object SpatialJoin {
                    unit: String = "udeg"): DataFrame = {
     val meters = unitIsMeters(unit)
     import spark.implicits._
-    val c = cover(specs, budget, allowed)
-    require(c.levels.forall(_ <= PolyCover.MAX_LEVEL), "key packing assumes level<=16")
-    def packed(lvl: Int, cell: Long): Long = (lvl.toLong << 34) | cell
-    val coverDf = c.rows.map { case (pid, pidx, lvl, cell, _) =>
-      (pid, pidx, packed(lvl, cell))
-    }.toDF("poly_id", "_pidx", "_lc")
-    val levels = c.levels
     val prepared = feats.select(featCol.cast("long").as("_fid"),
       fLo.cast("long").as("_lo"), fLa.cast("long").as("_la"),
       fHi.cast("long").as("_hi"), fHa.cast("long").as("_ha"))
-    val exploded = prepared.flatMap { r =>
-      val b = BBoxM(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-      levels.iterator.flatMap { z =>
-        ZGrid.bboxCells(z, b).map { case (cx, cy) =>
-          (r.getLong(0), b.lonMin, b.latMin, b.lonMax, b.latMax,
-            packed(z, Morton.encode(cx, cy)))
-        }
-      }
-    }.toDF("_fid", "_lo", "_la", "_hi", "_ha", "_lc")
-    val pairs = exploded.join(broadcast(coverDf), Seq("_lc"))
-      .select("_fid", "_lo", "_la", "_hi", "_ha", "_pidx", "poly_id")
-      .distinct()
-    val polyArr = c.polyArr
-    val clipped = pairs.mapPartitions { it =>
-      val kinds = new Array[AnyRef](polyArr.length)
-      val gf = new org.locationtech.jts.geom.GeometryFactory()
-      it.map { r =>
-        val (lo, la, hi, ha) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-        val pidx = r.getInt(5)
-        if (kinds(pidx) == null) kinds(pidx) = classifyZone(polyArr(pidx))
-        val area: Long = kinds(pidx) match {
-          case b: BBoxM =>
-            val w = math.min(hi, b.lonMax) - math.max(lo, b.lonMin)
-            val h = math.min(ha, b.latMax) - math.max(la, b.latMin)
-            if (w <= 0 || h <= 0) 0L
-            else if (meters) rectOverlapM2(w, h,
-              math.max(la, b.latMin), math.min(ha, b.latMax))
-            else w * h
-          case g: org.locationtech.jts.geom.Geometry =>
-            val shell = gf.createPolygon(Array(
-              new org.locationtech.jts.geom.Coordinate(lo.toDouble, la.toDouble),
-              new org.locationtech.jts.geom.Coordinate(hi.toDouble, la.toDouble),
-              new org.locationtech.jts.geom.Coordinate(hi.toDouble, ha.toDouble),
-              new org.locationtech.jts.geom.Coordinate(lo.toDouble, ha.toDouble),
-              new org.locationtech.jts.geom.Coordinate(lo.toDouble, la.toDouble)))
-            val inter = g.intersection(shell)
-            if (meters) jtsAreaM2(inter)
-            else math.floor(inter.getArea).toLong
-        }
-        (r.getString(6), area)
-      }
+    val clipped = clipPairs(prepared, col("_lo"), col("_la"), col("_hi"), col("_ha"),
+        cover(specs, budget, allowed)) { (r, zone, gf) =>
+      (r.getString(5), overlapArea(zone, gf, r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), meters))
     }.toDF("poly_id", "_area")
     clipped.where(col("_area") > 0)
       .groupBy("poly_id")
@@ -410,60 +346,77 @@ object SpatialJoin {
                        budget: Int = PolyCover.DEFAULT_BUDGET,
                        allowed: Array[Int] = DefaultLevels): DataFrame = {
     import spark.implicits._
-    val c = cover(specs, budget, allowed)
-    require(c.levels.forall(_ <= PolyCover.MAX_LEVEL), "key packing assumes level<=16")
-    def packed(lvl: Int, cell: Long): Long = (lvl.toLong << 34) | cell
-    val coverDf = c.rows.map { case (pid, pidx, lvl, cell, _) =>
-      (pid, pidx, packed(lvl, cell))
-    }.toDF("poly_id", "_pidx", "_lc")
-    val levels = c.levels
     val prepared = feats.select(featCol.cast("long").as("_fid"),
         fLo.cast("long").as("_lo"), fLa.cast("long").as("_la"),
         fHi.cast("long").as("_hi"), fHa.cast("long").as("_ha"),
         valueCol.cast("long").as("_v"))
       .where(col("_hi") > col("_lo") && col("_ha") > col("_la"))
-    val exploded = prepared.flatMap { r =>
-      val b = BBoxM(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-      val v = r.getLong(5)
-      levels.iterator.flatMap { z =>
-        ZGrid.bboxCells(z, b).map { case (cx, cy) =>
-          (r.getLong(0), b.lonMin, b.latMin, b.lonMax, b.latMax, v,
-            packed(z, Morton.encode(cx, cy)))
-        }
-      }
-    }.toDF("_fid", "_lo", "_la", "_hi", "_ha", "_v", "_lc")
-    val pairs = exploded.join(broadcast(coverDf), Seq("_lc"))
-      .select("_fid", "_lo", "_la", "_hi", "_ha", "_v", "_pidx", "poly_id")
-      .distinct()
-    val polyArr = c.polyArr
-    val contrib = pairs.mapPartitions { it =>
-      val kinds = new Array[AnyRef](polyArr.length)
-      val gf = new org.locationtech.jts.geom.GeometryFactory()
-      it.map { r =>
-        val (lo, la, hi, ha) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-        val v = r.getLong(5); val pidx = r.getInt(6)
-        if (kinds(pidx) == null) kinds(pidx) = classifyZone(polyArr(pidx))
-        val area: Long = kinds(pidx) match {
-          case b: BBoxM =>
-            val w = math.min(hi, b.lonMax) - math.max(lo, b.lonMin)
-            val h = math.min(ha, b.latMax) - math.max(la, b.latMin)
-            if (w <= 0 || h <= 0) 0L else w * h
-          case g: org.locationtech.jts.geom.Geometry =>
-            val shell = gf.createPolygon(Array(
-              new org.locationtech.jts.geom.Coordinate(lo.toDouble, la.toDouble),
-              new org.locationtech.jts.geom.Coordinate(hi.toDouble, la.toDouble),
-              new org.locationtech.jts.geom.Coordinate(hi.toDouble, ha.toDouble),
-              new org.locationtech.jts.geom.Coordinate(lo.toDouble, ha.toDouble),
-              new org.locationtech.jts.geom.Coordinate(lo.toDouble, la.toDouble)))
-            math.floor(g.intersection(shell).getArea).toLong
-        }
-        val fArea = (hi - lo) * (ha - la)
-        (r.getString(7), area, v * area / fArea)
-      }
+    val contrib = clipPairs(prepared, col("_lo"), col("_la"), col("_hi"), col("_ha"),
+        cover(specs, budget, allowed)) { (r, zone, gf) =>
+      val (lo, la, hi, ha) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+      val area = overlapArea(zone, gf, lo, la, hi, ha, meters = false)
+      (r.getString(6), area, r.getLong(5) * area / ((hi - lo) * (ha - la)))
     }.toDF("poly_id", "_area", "_share")
     contrib.where(col("_area") > 0)
       .groupBy("poly_id")
       .agg(count(lit(1)).as("n_sources"), sum("_share").as("est_value"))
+  }
+
+  /** Runs `kernel` once per (feature, zone) candidate pair of a clip join.
+    * Each row of `feats` (its id keeps equal features apart) explodes its
+    * bbox `lo, la, hi, ha` to the keys of the cells it spans at every
+    * distinct level of `c` (features are small relative to cover cells, so
+    * a handful each), which broadcast-join the zone cover, and each
+    * (feature, zone) pair is kept once. The kernel sees the columns of
+    * `feats`, then `poly_id`, with the zone classified once per task
+    * ([[classifyZone]]) and a task's JTS geometry factory.
+    */
+  private def clipPairs[T: Encoder](feats: DataFrame, lo: Column, la: Column, hi: Column,
+                                    ha: Column, c: Cover)
+                                   (kernel: (Row, AnyRef, GeometryFactory) => T): Dataset[T] = {
+    val spark = feats.sparkSession
+    import spark.implicits._
+    val levels = c.levels
+    val cellKeys = udf { (x0: Long, y0: Long, x1: Long, y1: Long) =>
+      val b = BBoxM(x0, y0, x1, y1)
+      levels.flatMap(z => ZGrid.bboxCells(z, b).map { case (cx, cy) => cellKey(z, Morton.encode(cx, cy)) })
+    }
+    val coverDf = c.rows.map(r => (r._1, r._2, cellKey(r._3, r._4))).toDF("poly_id", "_pidx", "_lc")
+    val pairs = feats.withColumn("_lc", explode(cellKeys(lo, la, hi, ha)))
+      .join(broadcast(coverDf), Seq("_lc"))
+      .select((feats.columns :+ "poly_id" :+ "_pidx").map(col).toIndexedSeq: _*)
+      .distinct()
+    val polyArr = c.polyArr
+    val pidxAt = feats.columns.length + 1
+    pairs.mapPartitions { it =>
+      val zones = new Array[AnyRef](polyArr.length)
+      val gf = new GeometryFactory()
+      it.map { r =>
+        val pidx = r.getInt(pidxAt)
+        if (zones(pidx) == null) zones(pidx) = classifyZone(polyArr(pidx))
+        kernel(r, zones(pidx), gf)
+      }
+    }
+  }
+
+  /** Planar µdeg² (or, with `meters`, m²) of rect [lo, hi] × [la, ha] inside
+    * a classified zone: the closed-form int64 overlap on a rect zone, the
+    * JTS intersection otherwise.
+    */
+  private def overlapArea(zone: AnyRef, gf: GeometryFactory, lo: Long, la: Long, hi: Long,
+                          ha: Long, meters: Boolean): Long = zone match {
+    case b: BBoxM =>
+      val w = math.min(hi, b.lonMax) - math.max(lo, b.lonMin)
+      val h = math.min(ha, b.latMax) - math.max(la, b.latMin)
+      if (w <= 0 || h <= 0) 0L
+      else if (meters) rectOverlapM2(w, h, math.max(la, b.latMin), math.min(ha, b.latMax))
+      else w * h
+    case g: Geometry =>
+      val inter = g.intersection(gf.createPolygon(Array(
+        new Coordinate(lo.toDouble, la.toDouble), new Coordinate(hi.toDouble, la.toDouble),
+        new Coordinate(hi.toDouble, ha.toDouble), new Coordinate(lo.toDouble, ha.toDouble),
+        new Coordinate(lo.toDouble, la.toDouble))))
+      if (meters) jtsAreaM2(inter) else math.floor(inter.getArea).toLong
   }
 
   /** A zone is an axis-aligned rectangle iff its single 4-vertex ring has
@@ -507,12 +460,12 @@ object SpatialJoin {
     if (t1 > t0) math.sqrt(dx * dx + dy * dy) * (t1 - t0) else 0.0
   }
 
-  private def jtsClipLen(f: org.locationtech.jts.geom.GeometryFactory,
+  private def jtsClipLen(f: GeometryFactory,
                          sx1: Long, sy1: Long, sx2: Long, sy2: Long,
-                         g: org.locationtech.jts.geom.Geometry): Double = {
+                         g: Geometry): Double = {
     val line = f.createLineString(Array(
-      new org.locationtech.jts.geom.Coordinate(sx1.toDouble, sy1.toDouble),
-      new org.locationtech.jts.geom.Coordinate(sx2.toDouble, sy2.toDouble)))
+      new Coordinate(sx1.toDouble, sy1.toDouble),
+      new Coordinate(sx2.toDouble, sy2.toDouble)))
     g.intersection(line).getLength
   }
 
@@ -592,23 +545,23 @@ object SpatialJoin {
     math.sqrt(dx * c * (dx * c) + dy * dy) * MPerMicro
   }
 
-  private def jtsClipLenMeters(f: org.locationtech.jts.geom.GeometryFactory,
+  private def jtsClipLenMeters(f: GeometryFactory,
                                sx1: Long, sy1: Long, sx2: Long, sy2: Long,
-                               g: org.locationtech.jts.geom.Geometry): Double = {
+                               g: Geometry): Double = {
     val line = f.createLineString(Array(
-      new org.locationtech.jts.geom.Coordinate(sx1.toDouble, sy1.toDouble),
-      new org.locationtech.jts.geom.Coordinate(sx2.toDouble, sy2.toDouble)))
+      new Coordinate(sx1.toDouble, sy1.toDouble),
+      new Coordinate(sx2.toDouble, sy2.toDouble)))
     val inter = g.intersection(line)
     var total = 0.0
-    def walk(gg: org.locationtech.jts.geom.Geometry): Unit = gg match {
-      case ls: org.locationtech.jts.geom.LineString =>
+    def walk(gg: Geometry): Unit = gg match {
+      case ls: LineString =>
         val cs = ls.getCoordinates
         var i = 1
         while (i < cs.length) {
           total += equirectLenM(cs(i - 1).x, cs(i - 1).y, cs(i).x, cs(i).y)
           i += 1
         }
-      case gc: org.locationtech.jts.geom.GeometryCollection =>
+      case gc: GeometryCollection =>
         (0 until gc.getNumGeometries).foreach(i => walk(gc.getGeometryN(i)))
       case _ => () // points from corner touches carry zero length
     }
@@ -632,7 +585,7 @@ object SpatialJoin {
     * result envelope's center latitude — identical chain to [[rectOverlapM2]]
     * when the result IS a rect (spec-gated parity on rect zones).
     */
-  private def jtsAreaM2(inter: org.locationtech.jts.geom.Geometry): Long = {
+  private def jtsAreaM2(inter: Geometry): Long = {
     if (inter.isEmpty || inter.getDimension < 2) return 0L
     val env = inter.getEnvelopeInternal
     val yc = (env.getMinY + env.getMaxY) * 0.5
@@ -650,9 +603,8 @@ object SpatialJoin {
     * [ref: oshdb-filter/…/GeometryFilterArea, FilterExpression.applyOSMGeometry].
     */
   def withGeoMetrics(polyDf: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import org.locationtech.jts.geom.{GeometryCollection, LineString, MultiPolygon, Point, Polygon}
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+    import org.locationtech.jts.geom.{MultiPolygon, Point, Polygon}
     val schema = StructType(polyDf.schema.fields ++ Array(
       StructField("area_m2", DoubleType), StructField("perimeter_m", DoubleType),
       StructField("length_m", DoubleType),
@@ -668,7 +620,7 @@ object SpatialJoin {
         // `length` metric, and vertices count everywhere (closing
         // duplicate dropped on rings, matching the polygon-only path)
         var area = 0.0; var perim = 0.0; var len = 0.0; var nv = 0
-        def walk(gg: org.locationtech.jts.geom.Geometry): Unit = gg match {
+        def walk(gg: Geometry): Unit = gg match {
           case p: Polygon =>
             // area from the STRUCTURED geometry (shell/hole known) — the
             // flattened-ring areaOf would redo ring nesting via raycast,

@@ -121,17 +121,46 @@ class FlagshipSpec extends AnyFunSuite {
     assert(!plan.contains("SortMergeJoin"), "point side must not shuffle in broadcast mode")
   }
 
-  test("salted shuffle-join path produces identical row set") {
+  /** Every (image, polygon) pair by the shared raycast kernel over each
+    * whole polygon; a seam spec's extended longitudes are reached through
+    * the point's ±360° copies.
+    */
+  private def brutePairs(imgs: org.apache.spark.sql.DataFrame,
+                         specs: Array[graft.fixtures.PolySpec]): Set[(String, String)] =
+    (for {
+      r <- imgs.select("image_id", "lon", "lat").collect().iterator
+      s <- specs.iterator
+      dx <- Iterator(0L, -360000000L, 360000000L)
+      if Raycast.contains(r.getLong(1) + dx, r.getLong(2), s.poly)
+    } yield (r.getString(0), s.poly_id)).toSet
+
+  private def imagePairs(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+    df.select("image_id", "poly_id").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+
+  test("join in all three modes == brute raycast, refine is the join condition") {
     val imgs = Fixtures.images(spark, 1000)
       .withColumn("lon", phashLon(col("phash")))
       .withColumn("lat", phashLat(col("phash")))
-    val specs = Fixtures.polygons
-    val base = SpatialJoin.join(spark, imgs, col("lon"), col("lat"), specs)
-      .select("image_id", "poly_id").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val salted = SpatialJoin.join(spark, imgs, col("lon"), col("lat"), specs,
-      broadcastThreshold = 0, saltBuckets = 4)
-      .select("image_id", "poly_id").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(salted == base)
+    val specs = Fixtures.polygons ++ graft.oracle.Derive.seamSpecs
+    val want = brutePairs(imgs, specs)
+    assert(want.exists(_._2 == "s0"), "fixture must reach the seam spec")
+    // (broadcastThreshold, saltBuckets) of the broadcast, sort-merge and salted modes
+    for ((mode, (threshold, salt)) <- Seq("broadcast" -> (4000000L, 1),
+                                         "sort-merge" -> (0L, 1), "salted" -> (0L, 4))) {
+      val df = SpatialJoin.join(spark, imgs, col("lon"), col("lat"), specs,
+        broadcastThreshold = threshold, saltBuckets = salt)
+      val got = imagePairs(df)
+      assert(got.size === got.distinct.size, mode)
+      assert(got.toSet === want, mode)
+      val plan = df.queryExecution.executedPlan
+      val joins = PlanWalk.collect(plan) {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+            if j.leftKeys.exists(_.references.exists(_.name == "_lc")) => j
+      }
+      assert(joins.size === 1, s"$mode\n$plan")
+      assert(joins.head.condition.exists(_.exists(_.prettyName == "raycast_pip_edges")),
+        s"$mode\n${joins.head}")
+    }
   }
 
   test("distributed-polygon-side join: joinDf == join, driver-free cover, seam specs work") {
@@ -139,16 +168,15 @@ class FlagshipSpec extends AnyFunSuite {
       .withColumn("lon", phashLon(col("phash")))
       .withColumn("lat", phashLat(col("phash")))
     val specs = Fixtures.polygons ++ graft.oracle.Derive.seamSpecs
-    val base = SpatialJoin.join(spark, imgs, col("lon"), col("lat"), specs)
-      .select("image_id", "poly_id").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    // polygon side as a TABLE of (poly_id, wkb) — cover + refine distributed
+    val want = brutePairs(imgs, specs)
+    assert(want.exists(_._2 == "s0"), "fixture must reach the seam spec")
+    assert(imagePairs(SpatialJoin.join(spark, imgs, col("lon"), col("lat"), specs)).toSet === want)
+    // polygon side as a TABLE of (poly_id, wkb) — cover + refine distributed;
+    // no pair twice either (seam halves must not double-match)
     val polyDf = Fixtures.polygonsDf(spark, specs)
-    val viaDf = SpatialJoin.joinDf(spark, imgs, col("lon"), col("lat"), polyDf)
-      .select("image_id", "poly_id").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(viaDf === base)
-    // no row-by-row duplicates either (seam halves must not double-match)
-    val cnt = SpatialJoin.joinDf(spark, imgs, col("lon"), col("lat"), polyDf).count()
-    assert(cnt === SpatialJoin.join(spark, imgs, col("lon"), col("lat"), specs).count())
+    val viaDf = imagePairs(SpatialJoin.joinDf(spark, imgs, col("lon"), col("lat"), polyDf))
+    assert(viaDf.toSet === want)
+    assert(viaDf.size === want.size)
   }
 
   test("joinDf: output is the point columns plus poly_id, also on empty inputs") {
@@ -164,7 +192,16 @@ class FlagshipSpec extends AnyFunSuite {
       Fixtures.polygonsDf(spark, Array.empty[graft.fixtures.PolySpec]))
     val noPoints = SpatialJoin.joinDf(spark, imgs.where(lit(false)),
       col("lon"), col("lat"), polyDf)
-    for (df <- Seq(noPolys, noPoints)) {
+    // join: no polygons, and no points in broadcast and in salted mode
+    val joinFull = SpatialJoin.join(spark, imgs, col("lon"), col("lat"), Fixtures.polygons)
+    assert(joinFull.schema === full.schema)
+    val joinNoPolys = SpatialJoin.join(spark, imgs, col("lon"), col("lat"),
+      Array.empty[graft.fixtures.PolySpec])
+    val joinNoPoints = SpatialJoin.join(spark, imgs.where(lit(false)), col("lon"), col("lat"),
+      Fixtures.polygons)
+    val saltedNoPoints = SpatialJoin.join(spark, imgs.where(lit(false)), col("lon"), col("lat"),
+      Fixtures.polygons, broadcastThreshold = 0, saltBuckets = 4)
+    for (df <- Seq(noPolys, noPoints, joinNoPolys, joinNoPoints, saltedNoPoints)) {
       assert(df.columns.toSeq === want)
       assert(df.schema === full.schema)
       assert(df.count() === 0L)
@@ -201,9 +238,10 @@ class FlagshipSpec extends AnyFunSuite {
       df.select("pid", "poly_id").as[(Long, String)].collect().toSeq.sorted
     val viaDf = SpatialJoin.joinDf(spark, pts, col("lon"), col("lat"),
       Fixtures.polygonsDf(spark, specs))
-    val got = pairs(viaDf)
-    val want = pairs(SpatialJoin.join(spark, pts, col("lon"), col("lat"), specs))
-    assert(got === want)
+    val want = (for (((x, y), i) <- coords.zipWithIndex; sp <- specs
+                     if Raycast.contains(x, y, sp.poly)) yield (i.toLong, sp.poly_id)).sorted
+    assert(pairs(viaDf) === want)
+    assert(pairs(SpatialJoin.join(spark, pts, col("lon"), col("lat"), specs)) === want)
     assert(want.map(_._2).distinct.size === 4)
     // a point on the west/east edge inside the sliver is in all three
     val onEdge = coords.indexOf((1000000L, 250000L)).toLong
@@ -471,6 +509,33 @@ class FlagshipSpec extends AnyFunSuite {
         col("flo"), col("fla"), col("fhi"), col("fha"), col("v"), rects5)
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(viaJts === expect.toMap)
+  }
+
+  test("clip joins: no features or no zones give no rows and the full schema") {
+    import spark.implicits._
+    type In = org.apache.spark.sql.DataFrame
+    type Specs = Array[graft.fixtures.PolySpec]
+    // one segment and one rect feature inside zone r3
+    val segs = Seq((1L, 1000000L, -40000000L, 3000000L, -38000000L))
+      .toDF("seg_id", "x1", "y1", "x2", "y2")
+    val feats = Seq((1L, 1000000L, -40000000L, 3000000L, -38000000L, 7L))
+      .toDF("fid", "flo", "fla", "fhi", "fha", "v")
+    val runs: Seq[(String, In, (In, Specs) => In)] = Seq(
+      ("clipLengthJoin", segs, (df, specs) => SpatialJoin.clipLengthJoin(spark, df, col("seg_id"),
+        col("x1"), col("y1"), col("x2"), col("y2"), specs)),
+      ("clipAreaJoin", feats, (df, specs) => SpatialJoin.clipAreaJoin(spark, df, col("fid"),
+        col("flo"), col("fla"), col("fhi"), col("fha"), specs)),
+      ("arealInterpolate", feats, (df, specs) => SpatialJoin.arealInterpolate(spark, df, col("fid"),
+        col("flo"), col("fla"), col("fhi"), col("fha"), col("v"), specs)))
+    for ((name, input, run) <- runs) {
+      val full = run(input, graft.oracle.Derive.rectSpecs)
+      assert(full.collect().map(_.getString(0)).toSeq === Seq("r3"), name)
+      for (df <- Seq(run(input.where(lit(false)), graft.oracle.Derive.rectSpecs),
+                     run(input, Array.empty[graft.fixtures.PolySpec]))) {
+        assert(df.schema === full.schema, name)
+        assert(df.count() === 0L, name)
+      }
+    }
   }
 
   test("cosPoly: ≤7e-9 of libm cos over |lat|≤90°, exactly 1 at the equator") {

@@ -416,14 +416,4 @@ class PolyCoverSpec extends AnyFunSuite {
       pts.foreach { case (px, py) => assert(Raycast.contains(px, py, poly)) }
     }
   }
-
-  test("coverRanges collapse contiguous runs and preserve coverage") {
-    val poly = TestPolys.irregular(0, 0, 5000000L, 16, 3)
-    val z = 12
-    val cells = PolyCover.coverAt(poly, z).map(_.morton).toSet
-    val ranges = PolyCover.coverRanges(poly, z)
-    val fromRanges = ranges.flatMap { case (lo, hi, _) => lo to hi }.toSet
-    assert(fromRanges == cells)
-    assert(ranges.length <= cells.size)
-  }
 }
