@@ -2,29 +2,31 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{FixedPoint, Seam, ZGrid}
+import graft.core.FixedPoint
 import graft.functions.GraftFunctions._
-import graft.functions.KnnTopKAgg.knnTopK
 
 /** kNN join via iterative cell-ring expansion (SURVEY.md C4; BASELINE.json
   * north_star "kNN via iterative H3 k-ring expansion joins" — our grid is the
-  * hand-built Morton ZGrid, same k-ring idea).
+  * hand-built Morton ZGrid, same k-ring idea), plus the exact radius join.
+  * Each operator has one entry point, [[knnJoinDf]] and [[radiusJoinDf]],
+  * whose query side is a DataFrame: a small query set is a small table, and
+  * nothing about the queries is collected to the driver.
   *
   * Algorithm (exact, not approximate):
-  *   round r: every active query expands to the square of cells with
-  *   Chebyshev cell-radius r around its own cell; the candidate set
-  *   (query_id, cell) is tiny (|Q| × (2r+1)²) and BROADCAST, so each round is
-  *   one broadcast hash join against the big point table (zero shuffles on
-  *   the point side) + a top-k per query over candidates only.
-  *   Stop when every query holds k neighbours whose kth distance is
-  *   strictly under the lower bound of any unexplored cell.
+  *   round r: every active query row explodes to the square of cells with
+  *   Chebyshev cell-radius r around its own cell, equi-joins the point table
+  *   on cell, and keeps its k nearest candidates. A query is finished once
+  *   it holds k neighbours whose kth distance is strictly under the lower
+  *   bound of any unexplored cell; the rest expand to 2r next round.
   *
-  * Per-query top-k: codegen window sort by default, or the BOUNDED K-HEAP
-  * aggregate (KnnTopKAgg, `topKVia = "heap"`): map-side partial heaps
-  * (O(k) state) put ≤ k pairs per query per map partition on the shuffle,
-  * no sort node (round-2 verdict #8). MEASURED at fixture and 8M scale the
-  * codegen window wins or ties (see topKFrames doc) — the heap is the
-  * opt-in for huge per-query candidate sets where shuffle volume rules.
+  * Per-query top-k: a window top-k — whole-stage-codegen sort of each
+  * query's candidates by (distance, neighbour id) and `row_number` ≤ k.
+  * Spark plans it with a partial WindowGroupLimit before the exchange, so
+  * at most k rows per query per map partition are shuffled (docs/PLANS.md,
+  * q0e section). Measured against the bounded k-heap aggregate
+  * (KnnTopKAgg), the window won 2–2.5× at fixture candidate sizes (q06
+  * 1.3 s vs 3.3 s isolated) and tied at 8M points (4.1 vs 4.4 s), and it
+  * takes neighbour ids of any orderable type.
   *
   * Distance metrics (`metric` parameter):
   *   - "planar" (default): squared planar micro-degree distance —
@@ -44,14 +46,10 @@ import graft.functions.KnnTopKAgg.knnTopK
   *     (upstream computes geodesic metrics too [ref: oshdb-util/…/Geo.java]).
   *
   * At 100 TB: the point table is scanned once per round (2–3 rounds typical
-  * when `level` is chosen from point density); each scan is
-  * partition-prunable by cell when the table is cell-clustered, because the
-  * candidate cells are known at plan time — the driver can push
-  * `cell IN (...)` before the join (done below via an optional prefilter).
+  * when `level` is chosen from point density), and finished queries leave
+  * the next round, so later scans serve only the stragglers.
   */
 object Knn {
-  final case class QueryPt(qid: Long, lonm: Long, latm: Long)
-
   val EARTH_R: Double = graft.core.GeoMetrics.EARTH_RADIUS_M
   val M_PER_DEG: Double = EARTH_R * math.Pi / 180.0
 
@@ -85,26 +83,9 @@ object Knn {
   }
 
   /** Lower bound (meters) on the haversine distance from a query at
-    * `latMicro` to any point ≥ r whole cells away (Chebyshev) at `level`.
-    * Collapses to 0 when the latitude band reaches a pole — callers must
-    * then keep expanding (r ≥ maxR terminates).
-    */
-  def haversineRingBound(latMicro: Long, r: Int, level: Int): Double = {
-    val latSpanDeg = (FixedPoint.LAT_RANGE >> level).toDouble / 1e6
-    val lonSpanDeg = (FixedPoint.LON_RANGE >> level).toDouble / 1e6
-    val dLat = r * latSpanDeg * M_PER_DEG
-    val bandDeg = math.abs(latMicro).toDouble / 1e6 + (r + 1) * latSpanDeg
-    if (bandDeg >= 90.0) 0.0
-    else {
-      val cosBand = math.cos(math.toRadians(bandDeg))
-      val dLon = 2 * EARTH_R * math.asin(math.min(1.0,
-        cosBand * math.sin(math.toRadians(r * lonSpanDeg) / 2)))
-      math.min(dLat, dLon)
-    }
-  }
-
-  /** Same bound as a Column over the query-latitude column (for the
-    * distributed-query-side join's per-row retirement test).
+    * latitude `latCol` (micro-degrees) to any point ≥ r whole cells away
+    * (Chebyshev) at `level`. Collapses to 0 when the latitude band reaches
+    * a pole — the query then keeps expanding (r ≥ maxR terminates).
     */
   private def haversineRingBoundCol(latCol: Column, r: Int, level: Int): Column = {
     val latSpanDeg = (FixedPoint.LAT_RANGE >> level).toDouble / 1e6
@@ -131,60 +112,18 @@ object Knn {
     else
       (haversineMeters(col("_qlon"), col("_qlat"), col("_plon"), col("_plat")), "d_m")
 
-  /** Exact radius (range) join: all points within `radius` of each query
-    * point — planar micro-degrees (int64-exact d², oracle-friendly) or
-    * haversine meters. One broadcast equi-join on the cells covering each
-    * query's disk bbox (superset of the disk), then the exact distance
-    * filter.
-    */
-  def radiusJoin(spark: SparkSession, points: DataFrame, idCol: Column,
-                 lonCol: Column, latCol: Column, queries: Seq[QueryPt],
-                 radiusMicro: Long = 0L, level: Int,
-                 metric: String = "planar", radiusMeters: Double = 0.0): DataFrame = {
-    import spark.implicits._
-    val planar = requireMetric(metric)
-    require(if (planar) radiusMicro > 0 else radiusMeters > 0,
-      "pass radiusMicro for planar, radiusMeters for haversine")
-    def wrapLon(v: Long): Long =
-      java.lang.Math.floorMod(v + 180000000L, 360000000L) - 180000000L
-    val cells = queries.flatMap { q =>
-      val (lonHalf, latHalf) =
-        if (planar) (radiusMicro, radiusMicro)
-        else haversineBBoxHalf(q.latm, radiusMeters)
-      val latLo = q.latm - latHalf; val latHi = q.latm + latHalf
-      // planar never wraps (distance across the seam is large in that
-      // metric); a geodesic disk DOES wrap at ±180 — Seam.bboxCells splits
-      // the wrapped interval into two in-world ranges
-      val it =
-        if (planar || 2 * lonHalf >= FixedPoint.LON_RANGE)
-          ZGrid.bboxCells(level, graft.core.BBoxM(
-            if (planar) q.lonm - lonHalf else FixedPoint.LON_MIN, latLo,
-            if (planar) q.lonm + lonHalf else FixedPoint.LON_MIN + FixedPoint.LON_RANGE, latHi))
-        else Seam.bboxCells(level, graft.core.BBoxM(
-          wrapLon(q.lonm - lonHalf), latLo, wrapLon(q.lonm + lonHalf), latHi))
-      it.map { case (x, y) =>
-        (q.qid, q.lonm, q.latm, graft.core.Morton.encode(x, y))
-      }
-    }
-    val cellsDf = cells.toDF("qid", "_qlon", "_qlat", "_pcell")
-    val src = points.select(idCol.as("neighbor_id"), lonCol.as("_plon"), latCol.as("_plat"))
-      .withColumn("_pcell", zcell(col("_plon"), col("_plat"), level))
-      .join(broadcast(cellsDf), Seq("_pcell"))
-    val (d, dName) = distCol(metric)
-    val filtered = src.withColumn(dName,  d)
-    (if (planar) filtered.where(col(dName) <= radiusMicro * radiusMicro)
-     else filtered.where(col(dName) <= radiusMeters))
-      .select("qid", "neighbor_id", dName)
-  }
-
-  /** DataFrame × DataFrame exact radius join — the distributed-query-side
-    * twin of [[radiusJoin]]: each query row explodes to the cell square
-    * covering its disk bbox (one round, radius is fixed), equi-join on
-    * cell, exact distance filter. The cell cover is a superset of the
-    * disk, so correctness never depends on the ring bound — only the
-    * candidate count does. For haversine the ring radius is sized from the
-    * query table's max |lat| (one tiny pre-agg): conservative for
-    * low-latitude queries, correct for all.
+  /** Exact radius (range) join: every `points` row within the radius of
+    * each `queries` row — planar micro-degrees (int64-exact d²,
+    * oracle-friendly, `radiusMicro`) or haversine meters (`radiusMeters`).
+    * Each query row explodes to the cell square covering its disk bbox (one
+    * round, the radius is fixed), equi-joins on cell, then the exact
+    * distance filter. The cell cover is a superset of the disk, so
+    * correctness never depends on the ring size — only the candidate count
+    * does. For haversine the ring radius is sized from the query table's
+    * max |lat| (one tiny pre-agg): conservative for low-latitude queries,
+    * correct for all.
+    *
+    * @return (qid, neighbor_id, d2|d_m)
     */
   def radiusJoinDf(spark: SparkSession, points: DataFrame, pId: Column,
                    pLon: Column, pLat: Column, queries: DataFrame, qId: Column,
@@ -197,7 +136,9 @@ object Knn {
     val (lonHalf, latHalf) =
       if (planar) (radiusMicro, radiusMicro)
       else {
-        val maxAbsLat = queries.agg(max(abs(qLat.cast("long")))).collect()(0).getLong(0)
+        // an empty query table has a NULL max; any latitude serves it
+        val maxAbsLat = queries.agg(coalesce(max(abs(qLat.cast("long"))), lit(0L)))
+          .collect()(0).getLong(0)
         haversineBBoxHalf(maxAbsLat, radiusMeters)
       }
     val rx = lonHalf / (FixedPoint.LON_RANGE >> level)
@@ -218,172 +159,56 @@ object Knn {
       .select("qid", "neighbor_id", dName)
   }
 
-  /** heap top-k per query over a joined candidate frame carrying
-    * (qid, _qlat, neighbor_id, distance). Returns the per-query stats
-    * frame (qid, _qlat, _n = result count, _kd = kth distance when _n==k)
-    * for retirement tests, plus the exploded (qid, neighbor_id, rank, d)
-    * rows.
-    *
-    * `topKVia` picks the implementation — MEASURED trade-off, not
-    * assumed: "window" (default) is whole-stage-codegen sort + row_number
-    * and wins 2–2.5× at fixture candidate sizes (q06 1.3 s vs 3.3 s
-    * isolated; even at 8M points the heap is a wash, 4.1 vs 4.4 s);
-    * "heap" (long ids only) is the bounded k-heap aggregate whose win is
-    * SHUFFLE VOLUME — map-side partials put ≤ k rows per query per map
-    * partition on the exchange instead of every candidate, which matters
-    * when per-query candidate sets are huge (dense cells × large k), a
-    * regime the sandbox fixtures cannot produce.
+  /** Window top-k per query over a joined candidate frame carrying
+    * (qid, _qlon, _qlat, neighbor_id, _plon, _plat): the
+    * (qid, _qlat, neighbor_id, rank, d2|d_m) rows with rank ≤ k.
     */
-  private def topKFrames(joined: DataFrame, metric: String, k: Int,
-                         topKVia: String)
-      : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.types.LongType
+  private def topK(joined: DataFrame, metric: String, k: Int): DataFrame = {
     val (d, dName) = distCol(metric)
-    val withD = joined.withColumn(dName, d)
-    val useHeap = topKVia match {
-      case "heap" =>
-        require(joined.schema("neighbor_id").dataType == LongType,
-          "heap top-k requires long neighbour ids")
-        true
-      case "window" => false
-      case other => throw new IllegalArgumentException(
-        s"topKVia must be window|heap, got $other")
-    }
-    if (useHeap) {
-      val arr = withD
-        .groupBy("qid", "_qlat")
-        .agg(knnTopK(struct(col(dName).as("d"), col("neighbor_id").as("id")), k).as("_tk"))
-      val rows = arr.select(col("qid"), posexplode(col("_tk")))
-        .select(col("qid"), col("col.id").as("neighbor_id"),
-          (col("pos") + 1).cast("int").as("rank"), col("col.d").as(dName))
-      val stats = arr.select(col("qid"), col("_qlat"), size(col("_tk")).as("_n"),
-        when(size(col("_tk")) === k, element_at(col("_tk"), k).getField("d")).as("_kd"))
-      (stats, rows)
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col(dName), col("neighbor_id"))
-      val rows = withD
-        .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-        .select(col("qid"), col("_qlat"), col("neighbor_id"), col("rank"), col(dName))
-      val stats = rows.groupBy(col("qid"), col("_qlat"))
-        .agg(count(lit(1)).as("_n"), max(when(col("rank") === k, col(dName))).as("_kd"))
-      (stats, rows.drop("_qlat"))
-    }
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(col(dName), col("neighbor_id"))
+    joined.withColumn(dName, d)
+      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+      .select(col("qid"), col("_qlat"), col("neighbor_id"), col("rank"), col(dName))
   }
 
-  /** Exact k nearest `points` rows for every query point.
-    *
-    * @param points   big table exposing `idCol`, `lonCol`, `latCol` (micro-deg)
-    * @param queries  small driver-side query set (broadcast each round)
-    * @param level    grid level for ring expansion (cells ≈ point spacing·k)
-    * @param r0       initial radius guess (≥1 saves rounds when k > density)
-    * @return (qid, neighbor_id, rank, d2|d_m) — exactly k rows per query
-    *         unless the table holds fewer than k rows in total
-    */
-  def knnJoin(spark: SparkSession, points: DataFrame, idCol: Column,
-              lonCol: Column, latCol: Column, queries: Seq[QueryPt], k: Int,
-              level: Int, r0: Int = 1, cellPrefilter: Boolean = true,
-              metric: String = "planar", topKVia: String = "window"): DataFrame = {
-    import spark.implicits._
-    val planar = requireMetric(metric)
-    require(k >= 1 && queries.nonEmpty)
-    val n = 1L << level
-    val minSpan = math.min(FixedPoint.LON_RANGE >> level, FixedPoint.LAT_RANGE >> level)
-    val maxR = n.toInt // square covers the world ⇒ brute force fallback
-
-    val pts = points.select(idCol.as("neighbor_id"), lonCol.as("_plon"), latCol.as("_plat"))
-      .withColumn("_pcell", zcell(col("_plon"), col("_plat"), level))
-
-    def candidateCells(r: Int): Seq[(Long, Long, Long, Long)] = // (qid,qlon,qlat,cell)
-      queries.flatMap { q =>
-        ZGrid.ringCells(level, q.lonm, q.latm, r, !planar) // geodesic wraps x
-          .map(cell => (q.qid, q.lonm, q.latm, cell))
-      }
-
-    def topk(r: Int): DataFrame = {
-      val cells = candidateCells(r)
-      val cellsDf = cells.toDF("qid", "_qlon", "_qlat", "_pcell")
-      // plan-time cell prefilter: lets a cell-clustered scan prune row groups
-      val src = if (cellPrefilter && cells.size <= 100000)
-        pts.where(col("_pcell").isInCollection(cells.map(_._4).distinct)) else pts
-      topKFrames(src.join(broadcast(cellsDf), Seq("_pcell")), metric, k, topKVia)._2
-    }
-
-    // straggler guard: past this ring size the candidate-cell list is more
-    // expensive than scanning everything — brute-force the whole query set
-    // (broadcast queries × one point-table pass + per-query top-k), exact
-    val maxRingCellsPerQuery = 100000L
-
-    def bruteForce(): DataFrame = {
-      val qDf = queries.map(q => (q.qid, q.lonm, q.latm)).toDF("qid", "_qlon", "_qlat")
-      topKFrames(pts.join(broadcast(qDf)), metric, k, topKVia)._2
-    }
-
-    var r = math.max(1, r0)
-    var done = false
-    var result: DataFrame = null
-    while (!done) {
-      if ((2L * r + 1) * (2L * r + 1) > maxRingCellsPerQuery) {
-        return bruteForce()
-      }
-      result = topk(r)
-      if (r >= maxR) done = true
-      else {
-        // (driver-side |Q| control loop — for DataFrame-valued query sets
-        // use knnJoinDf, which keeps the query table distributed)
-        // control decision only: k small × |Q| small ⇒ tiny collect
-        val dName = if (planar) "d2" else "d_m"
-        val stats = result.groupBy("qid")
-          .agg(count(lit(1)).as("n"), max(dName).as("kd"))
-          .collect().map(row => row.getLong(0) ->
-            (row.getLong(1), if (planar) row.getLong(2).toDouble else row.getDouble(2))).toMap
-        // strict <: an unexplored point at EXACTLY the bound distance could
-        // tie the kth neighbour's distance and win the (d, id) tie-break
-        done = queries.forall { q =>
-          val bound =
-            if (planar) { val b = r.toLong * minSpan; (b * b).toDouble }
-            else haversineRingBound(q.latm, r, level)
-          stats.get(q.qid).exists { case (cnt, kd) => cnt == k && kd < bound }
-        }
-        if (!done) r = math.min(maxR, r * 2)
-      }
-    }
-    result
-  }
-
-  /** DataFrame × DataFrame exact kNN join — the query side stays distributed
-    * (no driver-side query list), so arbitrarily large query tables work:
-    * tile-serving joins, all-pairs kNN, the reference's MapReducer-over-
-    * entities shape.
+  /** Exact k nearest `points` rows for every `queries` row. The query side
+    * stays distributed, so arbitrarily large query tables work: tile-serving
+    * joins, all-pairs kNN, the reference's MapReducer-over-entities shape.
     *
     * Per round r: every ACTIVE query row explodes to its (2r+1)² ring cells
     * (codegen RingCellsExpr — a few long columns, no strings), equi-joins the
     * point table on cell (Catalyst/AQE picks broadcast vs sort-merge from the
-    * candidate side's size), then the per-query k-heap aggregate. Queries
-    * whose kth neighbour distance is strictly inside the explored ring are
-    * FINISHED: their rows are banked and they leave the next round — the
-    * iteration only ever re-scans for stragglers in sparse regions. Driver
-    * sees one scalar count per round (control only).
+    * candidate side's size), then the window top-k. Queries whose kth
+    * neighbour distance is strictly inside the explored ring are FINISHED:
+    * their rows are banked and they leave the next round — the iteration
+    * only ever re-scans for stragglers in sparse regions. Driver sees one
+    * scalar count per round (control only). The strict < on the bound
+    * forbids an unexplored point at exactly the bound distance from tying
+    * the kth row and winning the (d, id) tie-break.
     *
-    * Exactness argument matches [[knnJoin]], per metric; the strict < on
-    * the bound forbids unexplored exact ties from displacing the kth row.
+    * @param level grid level for ring expansion (cells ≈ point spacing·k)
+    * @param r0    initial ring radius (≥1 saves rounds when k > density)
+    * @return (qid, neighbor_id, rank, d2|d_m) — exactly k rows per query
+    *         unless the table holds fewer than k rows in total
     */
   def knnJoinDf(spark: SparkSession, points: DataFrame, pId: Column,
                 pLon: Column, pLat: Column, queries: DataFrame, qId: Column,
                 qLon: Column, qLat: Column, k: Int, level: Int,
-                r0: Int = 1, metric: String = "planar",
-                topKVia: String = "window"): DataFrame = {
+                r0: Int = 1, metric: String = "planar"): DataFrame = {
     val planar = requireMetric(metric)
     require(k >= 1)
     val minSpan = math.min(FixedPoint.LON_RANGE >> level, FixedPoint.LAT_RANGE >> level)
     val maxR = (1L << level).toInt
-    val dName = if (planar) "d2" else "d_m"
 
     val pts = points.select(pId.as("neighbor_id"), pLon.as("_plon"), pLat.as("_plat"))
       .withColumn("_pcell", zcell(col("_plon"), col("_plat"), level))
     var active = queries.select(qId.as("qid"), qLon.as("_qlon"), qLat.as("_qlat"))
       .localCheckpoint()
-    var acc: DataFrame = null
+    val dName = distCol(metric)._2
+    // starts empty with the result's schema, so a query-free call keeps the
+    // point id's type; the optimizer drops this empty branch of the union
+    var acc = topK(pts.join(active), metric, k).drop("_qlat").where(lit(false))
     var r = math.max(1, r0)
     var remaining = active.limit(1).count()
     // straggler guard (sparse regions, |points| < k): RingCellsExpr
@@ -400,26 +225,24 @@ object Knn {
         else pts.join(active.withColumn("_pcell",
           explode(ringCells(col("_qlon"), col("_qlat"), level, r,
             wrapX = !planar))), Seq("_pcell"))
-      val (stats, topk) = topKFrames(joined, metric, k, topKVia)
+      // the round's ≤ k rows per query materialize once: the retirement
+      // test, the banked result and the next active set all read them, so
+      // neither this round's join nor a lazy union of rounds re-runs it
+      val topk = topK(joined, metric, k).localCheckpoint()
       val doneIds =
         if (r >= maxR || ringTooBig) active.select("qid") // whole world explored
         else {
           val bound =
             if (planar) { val b = r.toLong * minSpan; lit(b * b) }
             else haversineRingBoundCol(col("_qlat"), r, level)
-          stats.where(col("_n") === k && col("_kd") < bound).select("qid")
+          // a query holds k rows iff its rank-k row exists
+          topk.where(col("rank") === k && col(dName) < bound).select("qid")
         }
-      // banked eagerly: k rows per finished query materialize once; a lazy
-      // union would re-run every round's join at the final action (measured
-      // equal at fixture scale, strictly worse at 100k-query scale)
-      val finished = topk.join(doneIds, Seq("qid"), "left_semi").localCheckpoint()
-      acc = if (acc == null) finished else acc.union(finished)
+      acc = acc.union(topk.join(doneIds, Seq("qid"), "left_semi").drop("_qlat"))
       active = active.join(doneIds, Seq("qid"), "left_anti").localCheckpoint()
       remaining = active.limit(1).count()
       r = math.min(maxR, r * 2)
     }
-    if (acc == null) active.select(col("qid"), col("qid").as("neighbor_id"),
-      lit(0).as("rank"), (if (planar) lit(0L) else lit(0.0)).as(dName)).where(lit(false))
-    else acc
+    acc
   }
 }

@@ -281,13 +281,11 @@ object SpatialQueries {
     // ---- C4: exact kNN join via iterative cell-ring expansion
     QuerySpec("q06_knn", (s, dir) => {
       val nation = s.read.parquet(s"$dir/nation.parquet")
-        .select(col("n_nationkey"),
+        .select(col("n_nationkey").cast("long").as("qid"),
           Derive.lonMicro(col("n_nationkey")).as("lonm"),
           Derive.latMicro(col("n_nationkey")).as("latm"))
-        .collect().map(r => Knn.QueryPt(r.getAs[Number](0).longValue(),
-          r.getAs[Number](1).longValue(), r.getAs[Number](2).longValue()))
-      Knn.knnJoin(s, customerPts(s, dir), col("c_custkey"), col("lonm"), col("latm"),
-          nation.toSeq, k = 5, level = 4)
+      Knn.knnJoinDf(s, customerPts(s, dir), col("c_custkey"), col("lonm"), col("latm"),
+          nation, col("qid"), col("lonm"), col("latm"), k = 5, level = 4)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("qid", "rank")
     },
@@ -300,7 +298,7 @@ object SpatialQueries {
          |  FROM q CROSS JOIN c),
          |r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY d2, neighbor_id) AS rank FROM d)
          |SELECT qid, neighbor_id, rank, d2 FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
-    // ---- radius join with a DataFrame query side (single-round cell cover)
+    // ---- radius join over the supplier table as the query side (single-round cell cover)
     QuerySpec("q0g_radius_join_df", (s, dir) => {
       val sup = s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey"),
@@ -321,9 +319,8 @@ object SpatialQueries {
          |WHERE (c.plon - q.qlon) * (c.plon - q.qlon) + (c.plat - q.qlat) * (c.plat - q.qlat)
          |      <= ${15000000L * 15000000L}
          |ORDER BY qid, neighbor_id""".stripMargin),
-    // ---- C4 at scale: DataFrame × DataFrame kNN join — the query side is a
-    //      table (distributed ring expansion + per-round retirement), not a
-    //      driver-side Seq; same exact semantics as q06
+    // ---- C4 at scale: q06's kNN join over the supplier table as the query
+    //      side (distributed ring expansion + per-round retirement)
     QuerySpec("q0e_knn_df", (s, dir) => {
       val sup = s.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey"),
@@ -674,13 +671,11 @@ object SpatialQueries {
     // ---- range/radius join: cell cover + exact integer distance filter
     QuerySpec("q0a_radius_join", (s, dir) => {
       val nation = s.read.parquet(s"$dir/nation.parquet")
-        .select(col("n_nationkey"),
+        .select(col("n_nationkey").cast("long").as("qid"),
           Derive.lonMicro(col("n_nationkey")).as("lonm"),
           Derive.latMicro(col("n_nationkey")).as("latm"))
-        .collect().map(r => Knn.QueryPt(r.getAs[Number](0).longValue(),
-          r.getAs[Number](1).longValue(), r.getAs[Number](2).longValue()))
-      Knn.radiusJoin(s, customerPts(s, dir), col("c_custkey"), col("lonm"), col("latm"),
-          nation.toSeq, radiusMicro = 15000000L, level = 5)
+      Knn.radiusJoinDf(s, customerPts(s, dir), col("c_custkey"), col("lonm"), col("latm"),
+          nation, col("qid"), col("lonm"), col("latm"), radiusMicro = 15000000L, level = 5)
         .orderBy("qid", "neighbor_id")
     },
       s"""WITH q AS (SELECT CAST(n_nationkey AS BIGINT) AS qid, ${Derive.lonSql("n_nationkey")} AS qlon,

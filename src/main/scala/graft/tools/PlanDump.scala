@@ -67,13 +67,14 @@ object PlanDump {
         "the exact integer verify. No cartesian/BNLJ anywhere.",
       Similarity.cosineNearDupPairsLsh(emb, "vec_id", "embedding", 0.45, dims = 64))
 
-    dump("DataFrame-valued kNN join, round-1 candidate stage (q0e, round 3)",
+    dump("kNN join, round-1 candidate stage (q0e)",
       "Query side stays a DataFrame: ring cells explode per query row " +
         "(codegen RingCellsExpr), equi-join on cell, then the per-query " +
-        "top-k is the bounded k-heap aggregate (ObjectHashAggregate with " +
-        "map-side partial heaps — NO Window, NO Sort node; round-2 verdict " +
-        "#8); the driver sees only a per-round scalar. Shown: the r=1 " +
-        "round's plan.",
+        "top-k is a window top-k (sort by (d2, neighbor_id) within qid, " +
+        "row_number <= k), as in Knn.knnJoinDf. Spark puts a " +
+        "WindowGroupLimit on both sides of the exchange, so at most k rows " +
+        "per query per map partition are shuffled. The driver sees only a " +
+        "per-round scalar. Shown: the r=1 round's plan.",
       {
         val pts = emb.select(col("vec_id").as("id"),
           (col("vec_id") % 340000).cast("long").as("lonm"), (col("vec_id") % 160000).cast("long").as("latm"))
@@ -85,10 +86,10 @@ object PlanDump {
           .join(cand, Seq("_pcell"))
           .withColumn("d2", (col("_plon") - col("_qlon")) * (col("_plon") - col("_qlon")) +
             (col("_plat") - col("_qlat")) * (col("_plat") - col("_qlat")))
-          .groupBy("qid")
-          .agg(graft.functions.KnnTopKAgg.knnTopK(
-            struct(col("d2").as("d"), col("neighbor_id").as("id")), 5).as("_tk"))
-          .select(col("qid"), posexplode(col("_tk")))
+          .withColumn("rank", row_number().over(org.apache.spark.sql.expressions.Window
+            .partitionBy("qid").orderBy(col("d2"), col("neighbor_id"))))
+          .where(col("rank") <= 5)
+          .select("qid", "neighbor_id", "rank", "d2")
       })
 
     val custPts = spark.read.parquet(s"$sf/customer.parquet")

@@ -6,10 +6,26 @@ import org.scalatest.funsuite.AnyFunSuite
 class KnnSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
 
-  private def bruteForce(pts: Seq[(Long, Long, Long)], q: Knn.QueryPt, k: Int) =
+  /** (id, d2) of the k nearest `pts` to query (qid, lonm, latm). */
+  private def bruteForce(pts: Seq[(Long, Long, Long)], q: (Long, Long, Long), k: Int) = {
+    val (_, qx, qy) = q
     pts.map { case (id, x, y) =>
-      (id, (x - q.lonm) * (x - q.lonm) + (y - q.latm) * (y - q.latm))
+      (id, (x - qx) * (x - qx) + (y - qy) * (y - qy))
     }.sortBy { case (id, d2) => (d2, id) }.take(k)
+  }
+
+  /** planar kNN of (id, lonm, latm) points for (qid, lonm, latm) queries. */
+  private def knn(pts: Seq[(Long, Long, Long)], qs: Seq[(Long, Long, Long)], k: Int,
+                  level: Int, r0: Int = 1) =
+    Knn.knnJoinDf(spark, spark.createDataFrame(pts).toDF("id", "lonm", "latm"),
+      col("id"), col("lonm"), col("latm"),
+      spark.createDataFrame(qs).toDF("qid", "lonm", "latm"),
+      col("qid"), col("lonm"), col("latm"), k = k, level = level, r0 = r0)
+
+  /** qid -> (neighbor_id, d2) in rank order. */
+  private def ranked(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+      .groupBy(_._1).map { case (qid, rs) => qid -> rs.sortBy(_._3).map(r => (r._2, r._4)).toSeq }
 
   test("ring-expansion kNN equals brute force on skewed random points") {
     val rnd = new scala.util.Random(42)
@@ -21,26 +37,17 @@ class KnnSpec extends AnyFunSuite {
         (i, rnd.nextLong(340000000L) - 170000000L, rnd.nextLong(160000000L) - 80000000L)
     }
     val queries = Seq(
-      Knn.QueryPt(0, -19000000L, 11000000L),  // inside the dense cluster
-      Knn.QueryPt(1, 160000000L, -75000000L), // sparse far corner
-      Knn.QueryPt(2, 0L, 0L))
-    val df = spark.createDataFrame(pts).toDF("id", "lonm", "latm")
-    val got = Knn.knnJoin(spark, df, col("id"), col("lonm"), col("latm"),
-        queries, k = 7, level = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      .groupBy(_._1)
-    for (q <- queries) {
-      val exp = bruteForce(pts, q, 7)
-      val act = got(q.qid).sortBy(_._3).map(r => (r._2, r._4)).toSeq
-      assert(act === exp, s"query ${q.qid}")
-    }
+      (0L, -19000000L, 11000000L),  // inside the dense cluster
+      (1L, 160000000L, -75000000L), // sparse far corner
+      (2L, 0L, 0L))
+    val got = ranked(knn(pts, queries, k = 7, level = 5))
+    for (q <- queries) assert(got(q._1) === bruteForce(pts, q, 7), s"query ${q._1}")
   }
 
   test("k larger than a sparse neighbourhood still returns exactly k") {
     val pts = (0L until 50L).map(i => (i, i * 6000000L - 150000000L, i * 3000000L - 75000000L))
-    val df = spark.createDataFrame(pts).toDF("id", "lonm", "latm")
-    val q = Seq(Knn.QueryPt(9, -149000000L, -74000000L))
-    val got = Knn.knnJoin(spark, df, col("id"), col("lonm"), col("latm"), q, k = 20, level = 6)
+    val q = Seq((9L, -149000000L, -74000000L))
+    val got = knn(pts, q, k = 20, level = 6)
     assert(got.count() === 20)
     val exp = bruteForce(pts, q.head, 20).map(_._1)
     assert(got.orderBy("rank").collect().map(_.getLong(1)).toSeq === exp)
@@ -60,20 +67,9 @@ class KnnSpec extends AnyFunSuite {
       if (j % 4 == 0) (j, -19500000L + j * 10000, 10500000L + j * 10000)
       else (j, rnd.nextLong(340000000L) - 170000000L, rnd.nextLong(160000000L) - 80000000L)
     }
-    val df = spark.createDataFrame(pts).toDF("id", "lonm", "latm")
-    val qdf = spark.createDataFrame(qs).toDF("qid", "lonm", "latm")
-    for (via <- Seq("window", "heap")) {
-      val got = Knn.knnJoinDf(spark, df, col("id"), col("lonm"), col("latm"),
-          qdf, col("qid"), col("lonm"), col("latm"), k = 7, level = 5, topKVia = via)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-        .groupBy(_._1)
-      assert(got.size === 40)
-      for ((qid, qx, qy) <- qs) {
-        val exp = bruteForce(pts, Knn.QueryPt(qid, qx, qy), 7)
-        val act = got(qid).sortBy(_._3).map(r => (r._2, r._4)).toSeq
-        assert(act === exp, s"query $qid via $via")
-      }
-    }
+    val got = ranked(knn(pts, qs, k = 7, level = 5))
+    assert(got.size === 40)
+    for (q <- qs) assert(got(q._1) === bruteForce(pts, q, 7), s"query ${q._1}")
   }
 
   test("DataFrame radius join equals brute force") {
@@ -104,6 +100,32 @@ class KnnSpec extends AnyFunSuite {
       qdf, col("qid"), col("lonm"), col("latm"), k = 3, level = 5)
     assert(got.count() === 0)
     assert(got.columns.toSeq === Seq("qid", "neighbor_id", "rank", "d2"))
+    // string point ids against long query ids: an empty result carries the
+    // same schema as a non-empty one (neighbor_id is the point id's type)
+    val sdf = spark.createDataFrame(Seq(("a", 0L, 0L), ("b", 1000000L, 0L)))
+      .toDF("pid", "lonm", "latm")
+    val qs = spark.createDataFrame(Seq((7L, 10L, 10L))).toDF("qid", "lonm", "latm")
+    def run(q: org.apache.spark.sql.DataFrame) =
+      Knn.knnJoinDf(spark, sdf, col("pid"), col("lonm"), col("latm"),
+        q, col("qid"), col("lonm"), col("latm"), k = 1, level = 5)
+    val full = run(qs)
+    val empty = run(qs.where(lit(false)))
+    assert(full.collect().map(r => r.getString(1)).toSeq === Seq("a"))
+    assert(empty.count() === 0)
+    assert(empty.schema === full.schema)
+  }
+
+  test("haversine radius join: empty query table yields empty result") {
+    val df = spark.createDataFrame(Seq((1L, 0L, 0L), (2L, 1000000L, 0L)))
+      .toDF("id", "lonm", "latm")
+    def run(q: org.apache.spark.sql.DataFrame) =
+      Knn.radiusJoinDf(spark, df, col("id"), col("lonm"), col("latm"),
+        q, col("id"), col("lonm"), col("latm"),
+        level = 5, metric = "haversine", radiusMeters = 1000.0)
+    val got = run(df.where(lit(false)))
+    assert(got.count() === 0)
+    assert(got.schema === run(df).schema)
+    assert(got.columns.toSeq === Seq("qid", "neighbor_id", "d_m"))
   }
 
   test("straggler ring explosion falls back to full-scan top-k (exact)") {
@@ -115,25 +137,8 @@ class KnnSpec extends AnyFunSuite {
       (i, rnd.nextLong(340000000L) - 170000000L, rnd.nextLong(160000000L) - 80000000L))
     val qs = (0L until 5L).map(j =>
       (j, rnd.nextLong(340000000L) - 170000000L, rnd.nextLong(160000000L) - 80000000L))
-    val df = spark.createDataFrame(pts).toDF("id", "lonm", "latm")
-    val qdf = spark.createDataFrame(qs).toDF("qid", "lonm", "latm")
-    val got = Knn.knnJoinDf(spark, df, col("id"), col("lonm"), col("latm"),
-        qdf, col("qid"), col("lonm"), col("latm"), k = 4, level = 12, r0 = 200)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      .groupBy(_._1)
-    for ((qid, qx, qy) <- qs) {
-      val exp = bruteForce(pts, Knn.QueryPt(qid, qx, qy), 4)
-      assert(got(qid).sortBy(_._3).map(r => (r._2, r._4)).toSeq === exp, s"query $qid")
-    }
-    // driver-side variant takes the same guard
-    val got2 = Knn.knnJoin(spark, df, col("id"), col("lonm"), col("latm"),
-        qs.map(q => Knn.QueryPt(q._1, q._2, q._3)), k = 4, level = 12, r0 = 200)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      .groupBy(_._1)
-    for ((qid, qx, qy) <- qs) {
-      val exp = bruteForce(pts, Knn.QueryPt(qid, qx, qy), 4)
-      assert(got2(qid).sortBy(_._3).map(r => (r._2, r._4)).toSeq === exp, s"query $qid")
-    }
+    val got = ranked(knn(pts, qs, k = 4, level = 12, r0 = 200))
+    for (q <- qs) assert(got(q._1) === bruteForce(pts, q, 4), s"query ${q._1}")
   }
 
   test("haversine radius join equals exhaustive scan at high latitude") {
@@ -162,13 +167,6 @@ class KnnSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exp.nonEmpty)
     assert(got === exp)
-    // the driver-query-side variant agrees
-    val got2 = Knn.radiusJoin(spark, df, col("id"), col("lonm"), col("latm"),
-        qs.map(q => Knn.QueryPt(q._1, q._2, q._3)),
-        level = 5, metric = "haversine", radiusMeters = rMeters)
-      .select("qid", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got2 === exp)
   }
 
   test("haversine kNN join equals exhaustive ranking at high latitude") {
@@ -187,15 +185,11 @@ class KnnSpec extends AnyFunSuite {
       .withColumn("_d", Knn.haversineMeters(col("_qlon"), col("_qlat"), col("_plon"), col("_plat")))
       .withColumn("rank", row_number().over(w)).where(col("rank") <= 6)
       .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank")) -> r.getAs[Long]("id")).toMap
-    for ((name, res) <- Seq(
-        "df" -> Knn.knnJoinDf(spark, df, col("id"), col("lonm"), col("latm"),
-          qdf, col("qid"), col("lonm"), col("latm"), k = 6, level = 5, metric = "haversine"),
-        "seq" -> Knn.knnJoin(spark, df, col("id"), col("lonm"), col("latm"),
-          qs.map(q => Knn.QueryPt(q._1, q._2, q._3)), k = 6, level = 5, metric = "haversine"))) {
-      val got = res.collect()
-        .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank")) -> r.getAs[Long]("neighbor_id")).toMap
-      assert(got === exp, name)
-    }
+    val got = Knn.knnJoinDf(spark, df, col("id"), col("lonm"), col("latm"),
+        qdf, col("qid"), col("lonm"), col("latm"), k = 6, level = 5, metric = "haversine")
+      .collect()
+      .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank")) -> r.getAs[Long]("neighbor_id")).toMap
+    assert(got === exp)
   }
 
   test("haversine cover wraps: seam and polar-cap queries find far-lon points") {
@@ -212,17 +206,12 @@ class KnnSpec extends AnyFunSuite {
     val df = spark.createDataFrame(pts).toDF("id", "lonm", "latm")
     val qdf = spark.createDataFrame(qs).toDF("qid", "lonm", "latm")
     val rM = 300000.0 // 300 km
-    for (got <- Seq(
-        Knn.radiusJoinDf(spark, df, col("id"), col("lonm"), col("latm"),
-          qdf, col("qid"), col("lonm"), col("latm"),
-          level = 6, metric = "haversine", radiusMeters = rM),
-        Knn.radiusJoin(spark, df, col("id"), col("lonm"), col("latm"),
-          qs.map(q => Knn.QueryPt(q._1, q._2, q._3)),
-          level = 6, metric = "haversine", radiusMeters = rM))) {
-      val rows = got.select("qid", "neighbor_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(rows === Set((0L, 1L), (9L, 2L)), rows.toString)
-    }
+    val rows = Knn.radiusJoinDf(spark, df, col("id"), col("lonm"), col("latm"),
+        qdf, col("qid"), col("lonm"), col("latm"),
+        level = 6, metric = "haversine", radiusMeters = rM)
+      .select("qid", "neighbor_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(rows === Set((0L, 1L), (9L, 2L)), rows.toString)
     // kNN across the seam: q0's nearest neighbour must be point 1
     val knn = Knn.knnJoinDf(spark, df, col("id"), col("lonm"), col("latm"),
         qdf, col("qid"), col("lonm"), col("latm"), k = 1, level = 6, metric = "haversine")
@@ -269,32 +258,9 @@ class KnnSpec extends AnyFunSuite {
     }
   }
 
-  test("heap top-k opt-in: no window/sort in plan, rows identical to window") {
-    // topKVia = "heap" is the at-scale shuffle-volume configuration
-    // (<= k rows per query per map partition); the codegen window stays the
-    // measured default (2-2.5x faster at fixture candidate sizes, a wash
-    // at 8M points — BENCH/BASELINE.md round-3 A/B)
-    val pts = (0L until 500L).map(i => (i, i * 600000L - 150000000L, (i % 100) * 1500000L - 75000000L))
-    val df = spark.createDataFrame(pts).toDF("id", "lonm", "latm")
-    val qs = Seq(Knn.QueryPt(0, 0L, 0L), Knn.QueryPt(1, -100000000L, 40000000L))
-    val viaHeap = Knn.knnJoin(spark, df, col("id"), col("lonm"), col("latm"),
-      qs, k = 5, level = 4, topKVia = "heap")
-    val plan = viaHeap.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"heap mode must carry no window:\n$plan")
-    assert(plan.contains("ObjectHashAggregate"),
-      s"heap mode must aggregate via the typed heap:\n$plan")
-    val viaWindow = Knn.knnJoin(spark, df, col("id"), col("lonm"), col("latm"),
-      qs, k = 5, level = 4)
-    val a = viaHeap.collect().map(r => (r.getLong(0), r.getInt(2), r.getLong(1), r.getLong(3))).toSet
-    val b = viaWindow.collect().map(r => (r.getLong(0), r.getInt(2), r.getLong(1), r.getLong(3))).toSet
-    assert(a === b)
-  }
-
   test("k exceeding the table size returns the whole table ranked") {
     val pts = Seq((1L, 0L, 0L), (2L, 1000000L, 0L), (3L, -2000000L, 500000L))
-    val df = spark.createDataFrame(pts).toDF("id", "lonm", "latm")
-    val got = Knn.knnJoin(spark, df, col("id"), col("lonm"), col("latm"),
-      Seq(Knn.QueryPt(0, 100000L, 100000L)), k = 10, level = 8)
+    val got = knn(pts, Seq((0L, 100000L, 100000L)), k = 10, level = 8)
     assert(got.count() === 3)
   }
 }
